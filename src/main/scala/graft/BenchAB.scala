@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Same-boot A/B benchmark — the perf-claim evidence harness.
   *
   * Cross-boot comparisons of committed bench records are unreliable on
@@ -15,20 +13,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   SPARK_GRAFT_SF_DIR  — data dir (default sf0.1)
   *   SPARK_GRAFT_AB_REPS — samples per query (default 3)
   *
-  * Names resolve first in [[SparkEntry.queries]], then in [[variants]]
-  * (alternate implementations kept callable for exactly this purpose,
-  * keyed "<query>__<tag>"). Execution interleaves full rounds —
-  * round r times every query once before any query gets sample r+1 —
-  * so a slow machine phase penalizes all sides equally. The JSON
-  * records every sample plus the min, and the JVM boot id, so a
-  * committed record proves same-boot provenance.
+  * Names resolve in [[SparkEntry.queries]] only. Execution interleaves
+  * full rounds — round r times every query once before any query gets
+  * sample r+1 — so a slow machine phase penalizes all sides equally.
+  * The JSON records every sample plus the min, and the JVM boot id, so
+  * a committed record proves same-boot provenance.
+  *
+  * Workflow for an A/B: the change that makes the claim adds its alternate
+  * arm inline (a temporary "<query>__<tag>" entry merged into `all`
+  * below, or a temporary constructor option), runs this harness and
+  * commits the BENCH_AB_*.json record, then deletes the arm again —
+  * the losing side lives in that record and in git history, not as
+  * callable code.
   */
 object BenchAB {
-
-  /** Alternate implementations for A/B comparison only — never part of
-    * the Verify/oracle catalog. Key convention: "<query>__<tag>". */
-  def variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-  ) ++ graft.queries.AbVariants.variants
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.BenchAB <out.json> <q1,q2,…>")
@@ -38,7 +36,7 @@ object BenchAB {
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "3").toInt
     val spark = Sessions.local("graft-bench-ab")
     spark.sparkContext.setLogLevel("WARN")
-    val all = SparkEntry.queries ++ variants
+    val all = SparkEntry.queries
     val missing = names.filterNot(all.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
 

@@ -31,19 +31,6 @@ object GraftCaches {
     ds
   }
 
-  private val liveRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  /** RDD-level twin of [[tracked]], for constructors that persist below
-    * the Dataset layer (GlobalSeq's sorted rows): same generation-scoped
-    * release, same idempotence with the harnesses' RDD unpersist sweep. */
-  def trackedRdd[T](rdd: org.apache.spark.rdd.RDD[T],
-      level: org.apache.spark.storage.StorageLevel): org.apache.spark.rdd.RDD[T] = {
-    rdd.persist(level)
-    liveRdds.add(rdd)
-    rdd
-  }
-
   /** Release every persist registered by earlier catalog constructions.
     * Idempotent; double-unpersist (e.g. after a harness clearCache sweep)
     * is a no-op. */
@@ -52,11 +39,6 @@ object GraftCaches {
     while (d != null) {
       d.unpersist(blocking = false)
       d = live.poll()
-    }
-    var r = liveRdds.poll()
-    while (r != null) {
-      r.unpersist(blocking = false)
-      r = liveRdds.poll()
     }
   }
 

@@ -5,6 +5,8 @@ package graft
   * `plans/r<N>/<query>_{before,after}.txt`).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <q1,q2,…>
+  *   names are [[SparkEntry.queries]] keys; a before/after pair is two
+  *   runs with different suffixes, one on each side of the change.
   * Env:   SPARK_GRAFT_SF_DIR — data dir (default sf0.1)
   *
   * Writes <outDir>/<query>_<suffix>.txt. Construction-time jobs (e.g.
@@ -17,13 +19,13 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val all = SparkEntry.queries
+    val missing = names.filterNot(all.contains)
+    require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
-    // r15: also resolve BenchAB variants so before/after plan pairs can
-    // be dumped for A/B arms (e.g. <q>__rangesel as the "before" side)
-    val all = SparkEntry.queries ++ BenchAB.variants
     for (name <- names) {
       val df = all(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(

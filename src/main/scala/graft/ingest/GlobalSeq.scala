@@ -1,14 +1,12 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Scale-safe global sequencing: append a dense 0-based `seqCol` following
   * `sortCols` order WITHOUT a single-partition window.
   *
-  * Catalog plan: range-sort on the keys (Spark's range partitioner keeps
+  * Plan: range-sort on the keys (Spark's range partitioner keeps
   * partition i strictly before partition i+1 in sort order), then
   * `zipWithIndex` — one O(P) job collecting per-partition counts to the
   * driver, each partition's offset added locally. Data never funnels
@@ -18,153 +16,28 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * a LINEAGE CUT that heavy re-referencing consumers (the beam rank
   * chain) measurably depend on.
   *
-  * Round 15 (VERDICT r14 #1) attacked this spelling's known wart — the
-  * count job runs eagerly at construction and the consumer re-executes
-  * the sorted RDD — with two redesigns, BOTH measured slower same-boot
-  * at sf0.1 and retained as callable negatives
-  * (BENCH_AB_r15_globalseq.json; value identity pinned by GlobalSeqSpec):
-  *
-  *   - [[withSeqOffsets]], the fully-lazy SQL form (seq = broadcast
-  *     per-partition count offsets + monotonically_increasing_id's low
-  *     33 bits): ~2× wall on the beam queries — no eager jobs and no Row
-  *     conversion, but it forfeits the lineage cut and pays two extra
-  *     exchanges' orchestration per call;
-  *   - [[withSeqZipPersist]], zip over a persisted sorted RDD (one child
-  *     execution, the Quantile.nearestRank pattern): 1.2–1.7× — the
-  *     Row-object cache churn exceeds the saved reduce-side re-run.
-  *
-  * The re-execution the verdict targeted is bounded in practice: the
+  * The known wart — the count job runs eagerly at construction and the
+  * consumer re-executes the sorted RDD — is bounded in practice: the
   * shuffle map output is REUSED across the count job and the consumer,
-  * so only the reduce-side sort + Row conversion repeat — at 100 TB that
-  * is one extra post-shuffle local sort of the keyed rows, never a
-  * second scan of the child.
+  * so only the reduce-side sort + Row conversion repeat (GlobalSeqSpec
+  * pins the child at two passes). At 100 TB that is one extra
+  * post-shuffle local sort of the keyed rows, never a second scan of the
+  * child. Round 15 (VERDICT r14 #1) measured two "one child execution"
+  * redesigns against this spelling same-boot at sf0.1 and BOTH lost
+  * (BENCH_AB_r15_globalseq{,_confirm}.json):
+  *
+  *   - a fully-lazy SQL form (broadcast per-partition count offsets +
+  *     monotonically_increasing_id's low 33 bits): ~2× wall on the beam
+  *     queries — no eager jobs and no Row conversion, but it forfeits
+  *     the lineage cut and pays two extra exchanges' orchestration per
+  *     call;
+  *   - zip over a persisted sorted RDD (the Quantile.nearestRank
+  *     pattern): 1.2–1.7× — the Row-object cache churn exceeds the saved
+  *     reduce-side re-run.
   */
 object GlobalSeq {
 
-  /** A/B-only escape hatches: [[graft.queries.AbVariants]] wraps a catalog
-    * constructor in one of these so BenchAB can time the alternate
-    * spellings same-boot. Construction-scoped, never set in the catalog
-    * path. */
-  private val mode = new scala.util.DynamicVariable[String]("catalog")
-  private[graft] def withLegacyZip[T](body: => T): T =
-    mode.withValue("zip")(body)
-  private[graft] def withZipPersist[T](body: => T): T =
-    mode.withValue("zipPersist")(body)
-  private[graft] def withOffsets[T](body: => T): T =
-    mode.withValue("offsets")(body)
-
-  /** Catalog spelling: the zipWithIndex form. Round 15 measured BOTH
-    * "one child execution" redesigns against it same-boot at sf0.1 and
-    * both LOST (BENCH_AB_r15_globalseq*.json): the SQL offsets form ~2×
-    * on the beam queries (driver/orchestration-bound — it forfeits the
-    * LogicalRDD lineage cut this leaf provides), the persisted-zip form
-    * 1.2–1.7× (Row-object cache churn exceeds the saved reduce-side
-    * re-run). The "double execution" the r14 verdict targeted is bounded
-    * in practice: the shuffle map output is reused across the count job
-    * and the consumer, so only the reduce-side sort + Row conversion
-    * repeat. Both alternates stay callable (below) with a value-identity
-    * spec (GlobalSeqSpec). */
-  def withSeq(df: DataFrame, sortCols: Seq[Column], seqCol: String): DataFrame =
-    mode.value match {
-      case "zipPersist" => withSeqZipPersist(df, sortCols, seqCol)
-      case "offsets" => withSeqOffsets(df, sortCols, seqCol)
-      case _ => withSeqZip(df, sortCols, seqCol)
-    }
-
-  private[graft] def withSeqOffsets(df: DataFrame, sortCols: Seq[Column],
-      seqCol: String): DataFrame = {
-    require(!df.columns.exists(_.startsWith("_gs_")),
-      "GlobalSeq reserves the _gs_ column prefix")
-    // Spelled repartitionByRange + sortWithinPartitions, NOT orderBy: the
-    // counts branch hangs off the bare range exchange (a partitioning
-    // node EliminateSorts can never drop — counts only need WHERE rows
-    // land, not their order), and the main branch's local sort sits under
-    // a projection with nondeterministic expressions, which both
-    // EliminateSorts' recursive removal and filter pushdown refuse to
-    // cross — the row order and row set feeding the ids are pinned.
-    //
-    // The partition count is EXPLICIT (REPARTITION_BY_NUM): AQE never
-    // coalesces a user-numbered shuffle, so the two branches see the same
-    // partition ids even when ReuseExchange does not fire (measured: with
-    // the coalescible spelling the branches coalesced DIFFERENTLY inside
-    // a cached nested chain and the pid equi-join dropped 3/4 of the
-    // corpus). Range boundaries are deterministic per partition index, so
-    // un-reused twin exchanges still agree row-for-row.
-    //
-    // Because pinning the count disables AQE coalescing, the count is
-    // derived STATICALLY from the child's size statistics (guide §2's
-    // scale-adaptive partitioning): sizeInBytes / advisoryPartitionSize,
-    // clamped to [1, spark.sql.shuffle.partitions]. A small frame gets
-    // the single partition AQE would have coalesced to (measured: the
-    // pinned-32 spelling left 32-partition caches that exploded
-    // downstream task counts ~2× on the beam queries at sf0.1); a
-    // corpus-scale frame gets the full configured count. The estimate
-    // only steers partition COUNT — any value is row-correct.
-    val conf = df.sparkSession.sessionState.conf
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nParts = {
-      val byStats = est / BigInt(math.max(conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), 1L))
-      (byStats + 1).min(BigInt(conf.numShufflePartitions)).max(BigInt(1)).toInt
-    }
-    val parted = df.repartitionByRange(nParts, sortCols: _*)
-    val sorted = parted.sortWithinPartitions(sortCols: _*)
-    // The id-stamped frame is persisted (generation-tracked): the offsets
-    // rollup and the main join are TWO consumers of the same rows, and
-    // without the persist Catalyst's column pruning differentiates the
-    // two branches' exchanges (the rollup keeps only the sort keys), so
-    // ReuseExchange cannot dedupe them and the child re-executes per
-    // branch — 2^depth executions for nested chains (measured: the beam
-    // rank chain recomputed its 18-projection SRP subtree from parquet
-    // per branch, 2× wall on x143). With the cache the child runs ONCE;
-    // and because the exchange is REPARTITION_BY_NUM with deterministic
-    // range boundaries, even a recompute after an early unpersist
-    // reproduces identical pids/ids, so the persist is a pure
-    // performance choice, never load-bearing for correctness.
-    val marked = graft.GraftCaches.tracked(sorted
-      .select(col("*"), monotonically_increasing_id().as("_gs_mid"),
-        spark_partition_id().as("_gs_pid")))
-    val counts = marked
-      .groupBy(col("_gs_pid")).agg(count(lit(1)).as("_gs_n"))
-    // exclusive prefix sum over the P-row rollup — the one partition-less
-    // window in this spelling sits on a frame bounded by the shuffle
-    // partition count, never by corpus rows (enrolled per consumer in
-    // GlobalWindowInventorySpec)
-    val offsets = counts.select(col("_gs_pid"),
-      (sum(col("_gs_n")).over(Window.orderBy(col("_gs_pid")))
-        - col("_gs_n")).as("_gs_off"))
-    marked
-      .join(broadcast(offsets), "_gs_pid")
-      .withColumn(seqCol,
-        col("_gs_off") + col("_gs_mid").bitwiseAND(lit((1L << 33) - 1)))
-      .select(df.columns.map(col) :+ col(seqCol): _*)
-  }
-
-  /** [[withSeqZip]] with the post-sort Row RDD persisted across
-    * zipWithIndex's count job and the consumer (the Quantile.nearestRank
-    * two-job pattern): the child executes ONCE — the count job
-    * materializes the sorted rows, the consumer (and any outer withSeq's
-    * sampling/shuffle) reads blocks — and the InternalRow→Row conversion
-    * is paid once instead of per pass. Release is generation-scoped via
-    * [[graft.GraftCaches.trackedRdd]]; the harnesses' RDD unpersist sweep
-    * covers harness runs, and an early unpersist merely recomputes
-    * (partition-deterministic, so ids are reproduced exactly). */
-  private[graft] def withSeqZipPersist(df: DataFrame, sortCols: Seq[Column],
-      seqCol: String): DataFrame = {
-    val sorted = df.orderBy(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(seqCol, LongType, nullable = false))
-    val base = graft.GraftCaches.trackedRdd(sorted.rdd,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rdd = base.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    sorted.sparkSession.createDataFrame(rdd, schema)
-  }
-
-  /** The pre-round-15 spelling, kept callable for the same-boot A/B
-    * control: `zipWithIndex` runs an eager O(P) count job at construction
-    * and the consumer re-executes the child. */
-  private[graft] def withSeqZip(df: DataFrame, sortCols: Seq[Column],
-      seqCol: String): DataFrame = {
+  def withSeq(df: DataFrame, sortCols: Seq[Column], seqCol: String): DataFrame = {
     val sorted = df.orderBy(sortCols: _*)
     val schema = StructType(
       sorted.schema.fields :+ StructField(seqCol, LongType, nullable = false))

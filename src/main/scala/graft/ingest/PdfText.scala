@@ -42,6 +42,8 @@ object PdfText {
 
   private val objRe: Regex = """(?s)(\d+)\s+(\d+)\s+obj\b""".r
   private val refRe: Regex = """(\d+)\s+\d+\s+R""".r
+  /** A DIRECT integer /Length (an indirect `/Length 12 0 R` never matches). */
+  private val directLengthRe: Regex = """/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)""".r
 
   private final case class PdfObj(dict: String, stream: Option[Array[Byte]],
     gen: Int = 0)
@@ -64,16 +66,32 @@ object PdfText {
           var dataStart = m.end + streamAt + "stream".length
           if (dataStart < s.length && s.charAt(dataStart) == '\r') dataStart += 1
           if (dataStart < s.length && s.charAt(dataStart) == '\n') dataStart += 1
-          val dataEnd = s.indexOf("endstream", dataStart)
-          if (dataEnd < 0) out += num -> PdfObj(dict, None, gen)
-          else {
-            // trim the EOL that precedes "endstream"
-            var e = dataEnd
-            if (e > dataStart && s.charAt(e - 1) == '\n') e -= 1
-            if (e > dataStart && s.charAt(e - 1) == '\r') e -= 1
-            out += num -> PdfObj(dict,
-              Some(java.util.Arrays.copyOfRange(bytes, dataStart, e)), gen)
+          def eolThenEndstream(i: Int): Boolean = {
+            var q = i
+            if (q < s.length && s.charAt(q) == '\r') q += 1
+            if (q < s.length && s.charAt(q) == '\n') q += 1
+            s.startsWith("endstream", q)
           }
+          // A direct /Length N is exact when the N data bytes are followed
+          // by an optional EOL and "endstream": binary data may itself end
+          // in CR or LF (an AES ciphertext ending in 0x0D), which the EOL
+          // trim would cut. Indirect or wrong lengths and damaged files
+          // fall back to the trim.
+          val byLength = directLengthRe.findFirstMatchIn(dict)
+            .flatMap(_.group(1).toIntOption)
+            .filter(n => n <= s.length - dataStart &&
+              eolThenEndstream(dataStart + n))
+            .map(dataStart + _)
+          lazy val byTrim = Some(s.indexOf("endstream", dataStart))
+            .filter(_ >= 0).map { dataEnd =>
+              // trim the EOL that precedes "endstream"
+              var e = dataEnd
+              if (e > dataStart && s.charAt(e - 1) == '\n') e -= 1
+              if (e > dataStart && s.charAt(e - 1) == '\r') e -= 1
+              e
+            }
+          out += num -> PdfObj(dict, byLength.orElse(byTrim)
+            .map(java.util.Arrays.copyOfRange(bytes, dataStart, _)), gen)
         }
       }
     }
@@ -745,10 +763,14 @@ object PdfText {
       .as[(String, Array[Byte])]
       .mapPartitions(_.map { case (p, bytes) => (p, extract(bytes)) })
       .toDF("path", "value")
+      // try_cast: a file name with no digits (or too many) gets a NULL
+      // file_seq instead of failing the job under ANSI casts; those files
+      // sort after the numbered ones, by path
       .withColumn("file_seq",
         regexp_extract(regexp_extract(col("path"), "([^/]+)$", 1), "(\\d+)", 1)
-          .cast("long"))
-    GlobalSeq.withSeq(decoded, Seq(col("file_seq"), col("path")), "doc_seq")
+          .try_cast("long"))
+    GlobalSeq.withSeq(decoded,
+      Seq(col("file_seq").asc_nulls_last, col("path")), "doc_seq")
       .select(col("doc_seq"), col("value"))
   }
 }

@@ -8,7 +8,7 @@ import graft.ext.Similarity
 import graft.ingest.GlobalSeq
 
 /** The x143 beam ANN's recall-at-scale contract, made executable: the
-  * catalog entry's knobs (2 layers, 2+3 hops) are tuned for the shipped
+  * catalog entry's fixed flat search (1 layer, 4 hops) is tuned for the shipped
   * 500–2000-vector corpora and — as the round-6 30k-vector probe
   * measured (0.002 raw recall) — do NOT carry to larger corpora on
   * their own. Per the HNSW contract the design comment cites, what
@@ -69,8 +69,7 @@ object BeamSchedule {
         GlobalSeq.withSeq(e0, Seq(col("b1"), col("p0"), col("vec_id")), "s0"),
         Seq(col("b2"), col("p1"), col("vec_id")), "s1")
       .persistTracked()
-    val edges0 = Ext43.knnEdges(e, Seq("s0", "s1"), 128, 16,
-      narrowShuffles = false).persistTracked()
+    val edges0 = Ext43.knnEdges(e, Seq("s0", "s1"), 128, 16).persistTracked()
     // upper layers, bottom-up: (sampled frame, its edges). The sample
     // predicate MURMUR-HASHES vec_id instead of the catalog's raw
     // vec_id % 8^ℓ: raw-mod sampling silently assumes ids are
@@ -90,8 +89,7 @@ object BeamSchedule {
             .select(col("vec_id"), col("q"), col("b1"), col("p0")),
           Seq(col("b1"), col("p0"), col("vec_id")), "sc")
         .persistTracked()
-      (el, Ext43.knnEdges(el, Seq("sc"), 16, 6, narrowShuffles = false)
-        .persistTracked())
+      (el, Ext43.knnEdges(el, Seq("sc"), 16, 6).persistTracked())
     }
     // Hash sampling is binomial, not deterministic-count: near the topCap
     // boundary an upper layer CAN come back empty, and an empty entry
@@ -130,7 +128,7 @@ object BeamSchedule {
     // 2^hops. Invisible at the catalog's 5 hops / 2k vectors; at the
     // SCHEDULE's 9 hops on a 100k corpus it cost ~14 min of pure
     // driver-side Catalyst work and OOM'd a 4g driver rendering the
-    // explain string (measured, BeamProbe round 14). createDataFrame on
+    // explain string (measured in round 14). createDataFrame on
     // the hop output's RDD makes the next hop's plan start from a
     // LogicalRDD leaf — plan size O(1) per hop, distributed execution
     // unchanged. The persist stays load-bearing: the beam feeds two

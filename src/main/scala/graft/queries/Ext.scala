@@ -136,53 +136,35 @@ object Ext {
     // indexed. Candidate count tracks rare-shingle collisions instead of
     // hot-shingle f² blowup (naive inverted index: 83 s at sf0.1; this: ~5 s)
     // and the final exact-Jaccard verify makes the output provably identical.
-    "x4_ngram_jaccard" -> ((s, d) => ngramJaccard(s, d, windowPrefix = true)),
+    "x4_ngram_jaccard" -> ((s, d) => ngramJaccard(s, d)),
   ) ++ moreQueries
 
-  /** x4 body with the round-15 prefix-selection knob (VERDICT r14 #6).
-    *
-    * windowPrefix = false spells the per-doc prefix ranks as
-    * `sort_array(collect_list(struct(df, shingle)))` + `slice` +
-    * `posexplode` — an AGGREGATE selection instead of the
-    * row_number-over-doc window. Value-identical: shingles are distinct
-    * per doc (docShingles), so (df, shingle) is a total order and the
-    * sorted array's 1-based position IS the window's row_number; the
-    * slice keeps exactly pos ≤ n − ⌈t·n⌉ + 1. RETAINED NEGATIVE
-    * (round 15): a same-boot wash both ways across two boots
+  /** x4 body. The per-doc prefix ranks are a row_number over the
+    * doc-partitioned window. Round 15 (VERDICT r14 #6) measured the
+    * aggregate spelling — `sort_array(collect_list(struct(df, shingle)))`
+    * + `slice` + `posexplode` — and it LOST the adopt-or-close test: a
+    * same-boot wash both ways across two boots
     * (BENCH_AB_r15_x4prefix{,_confirm}.json — mins favor the window,
     * medians split), and the at-scale argument is equivocal too:
     * collect_list's partial mode ships every element, so the exchange
     * carries the same bytes as the window's, and the df join (corpus
     * vocabulary) will not broadcast at real scale, so no pre-exchange
-    * pruning materializes. The catalog keeps the window spelling; the
-    * aggregate arm stays callable (__aggprefix). */
-  private[queries] def ngramJaccard(s: SparkSession, d: String,
-      windowPrefix: Boolean, persistPrefix: Boolean = true): DataFrame = {
+    * pruning materializes. The prefix frame is persisted because the
+    * self-join below reads it twice; dropping that persist measured a
+    * wash (min 1.40 vs 1.42 s, medians favour the persist;
+    * BENCH_AB_r15_x4prefixpersist.json). */
+  private def ngramJaccard(s: SparkSession, d: String): DataFrame = {
       val t = 0.6
       val sh = docShinglesHashed(documents(s, d)).persistTracked()
       val inv = sh.select(col("doc_id"), size(col("hs")).as("n"),
         explode(col("ss")).as("shingle"))
       val freq = inv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      val prefix0 =
-        if (windowPrefix) {
-          inv.join(freq, Seq("shingle"))
-            .withColumn("pos", row_number().over(
-              Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))))
-            .filter(col("pos") <= col("n") - ceil(col("n") * t) + 1)
-        } else {
-          inv.join(freq, Seq("shingle"))
-            .groupBy(col("doc_id"), col("n"))
-            .agg(sort_array(collect_list(struct(col("df"), col("shingle"))))
-              .as("arr"))
-            .select(col("doc_id"), col("n"),
-              posexplode(slice(col("arr"), lit(1),
-                (col("n") - ceil(col("n") * t) + 1).cast("int"))))
-            .select(col("doc_id"), col("n"),
-              (col("pos") + 1).as("pos"), col("col.shingle").as("shingle"))
-        }
-      val prefix1 = prefix0
+      val prefix = inv.join(freq, Seq("shingle"))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))))
+        .filter(col("pos") <= col("n") - ceil(col("n") * t) + 1)
         .select(col("doc_id"), col("n"), col("pos"), col("shingle"))
-      val prefix = if (persistPrefix) prefix1.persistTracked() else prefix1
+        .persistTracked()
       // length filter: Jaccard ≥ t ⇒ ⌈t·n1⌉ ≤ n2 (both directions).
       // POSITIONAL filter (full PPJoin): at a shared token sitting at
       // 1-based rank pos within each doc's df-sorted order, the remaining

@@ -30,21 +30,19 @@ object Ext11 {
     // so every (2k, 2k+1) pair must surface at Hamming 0; the spec pins
     // that recall. Decode is partition-local; the only shuffles are the
     // band join and the rollup.
-    "x64_image_ahash" -> ((s, d) => imageAhash(s, d, persist = true)))
+    "x64_image_ahash" -> ((s, d) => imageAhash(s, d)))
 
-  /** The full x64 body; `persist` caches the decoded-hash frame, which
-    * three consumers read (band explode + both verify joins) — without
-    * it the REAL PNG/BMP encode+decode pipeline runs three times per
-    * query (round-10 finding; adopted on a same-boot win, see
-    * BENCH_AB_r10_x64persist.json). `persist = false` is the AbVariants
-    * cost control. */
-  private[graft] def imageAhash(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
+  /** The full x64 body. The decoded-hash frame is persisted: three
+    * consumers read it (band explode + both verify joins), and without
+    * the persist the REAL PNG/BMP encode+decode pipeline runs three
+    * times per query (round-10 finding; adopted on a same-boot win, see
+    * BENCH_AB_r10_x64persist.json). */
+  private def imageAhash(s: SparkSession, d: String): DataFrame = {
       import graft.GraftCaches.TrackedPersist
-      val hashes0 = Multimodal.imageAHashes(
+      val hashes = Multimodal.imageAHashes(
         Multimodal.synthImagePayloadsSeeded(
           documents(s, d).select(col("doc_id")))).toDF()
-      val hashes = if (persist) hashes0.persistTracked() else hashes0
+        .persistTracked()
       val bands = hashes.select(col("doc_id"), explode(array(
         struct(lit(0).as("band"), col("ahash_lo").bitwiseAND(lit(65535L)).as("bv")),
         struct(lit(1).as("band"), shiftright(col("ahash_lo"), 16).as("bv")),

@@ -71,7 +71,7 @@ object Ext19 {
     // Round 15: freq persist dropped (the exchange-topped-rollup rule;
     // BENCH_AB_r15_rollups2.json) — all four consumers share the vocab
     // groupBy's exchange.
-    "x79_vocab_coverage" -> ((s, d) => vocabCoverage(s, d, persistFreq = false)),
+    "x79_vocab_coverage" -> ((s, d) => vocabCoverage(s, d)),
 
     // X80 DUP-CLUSTER SIZE HISTOGRAM: the dedup AUDIT view — how many
     // exact-duplicate clusters exist at each size (1 = unique). Two
@@ -176,14 +176,11 @@ object Ext19 {
         .orderBy(col("doc_id"))
     }))
 
-  /** x79 body with the round-15 freq-persist knob. */
-  private[graft] def vocabCoverage(s: SparkSession, d: String,
-      persistFreq: Boolean): DataFrame = {
-      import graft.GraftCaches.TrackedPersist
-      val freq0 = documents(s, d)
+  /** x79 body. */
+  private def vocabCoverage(s: SparkSession, d: String): DataFrame = {
+      val freq = documents(s, d)
         .select(explode(TextOps.words(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      val freq = if (persistFreq) freq0.persistTracked() else freq0
       val total = freq.agg(sum(col("c")).as("total"))
       val pts = Seq(100, 1000, 10000).map { k =>
         freq.orderBy(col("c").desc, col("word")).limit(k)

@@ -84,7 +84,7 @@ object Ext20 {
       // (l, r) groupBy exchange, AQE stage reuse dedupes; the r14
       // x66/x138 rule). A/B in BENCH_AB_r15_x85.json; bg's persist stays
       // (exchange-less top — the q9 rule).
-      bigramLmScore(s, d, persistC2 = false)),
+      bigramLmScore(s, d)),
 
     // X86 TEMPERATURE-SCALED MIXTURE WEIGHTS (T = 2): per-source sampling
     // weight ∝ sqrt(token count) — the standard flattening that keeps
@@ -141,9 +141,8 @@ object Ext20 {
     s"list_min(list_transform(hs, x -> ($a*x+$b) % 2147483647)) AS m$j"
   }.mkString(",\n  ")
 
-  /** x85 body with the round-15 c2-persist knob (see the catalog entry). */
-  private[graft] def bigramLmScore(s: SparkSession, d: String,
-      persistC2: Boolean): DataFrame = {
+  /** x85 body (see the catalog entry). */
+  private def bigramLmScore(s: SparkSession, d: String): DataFrame = {
       val bg = documents(s, d)
         .select(col("doc_id"), TextOps.words(col("text")).as("w"))
         .filter(size(col("w")) >= 2)
@@ -152,8 +151,7 @@ object Ext20 {
           .as("p"))
         .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))
         .persistTracked()
-      val c2base = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
-      val c2 = if (persistC2) c2base.persistTracked() else c2base
+      val c2 = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
       // c1(l) = Σ_r c2(l, r) exactly — rolled up from the already-reduced
       // bigram table instead of a second corpus-scale shuffle of bg
       val c1 = c2.groupBy(col("l")).agg(sum(col("c2")).as("c1"))

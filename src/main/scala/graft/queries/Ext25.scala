@@ -49,14 +49,11 @@ object Ext25 {
     // dedupes the heavy work persist-free and only the final aggregation
     // re-runs per consumer (the x85/x116/x167 twin; same-boot A/B in
     // BENCH_AB_r15_c2persists.json).
-    "x97_backoff_lm" -> ((s, d) => backoffLm(s, d, persistTables = false)),
+    "x97_backoff_lm" -> ((s, d) => backoffLm(s, d)),
   ) ++ queriesB
 
-  /** x97 body with the round-15 count-table persist knob. */
-  private[graft] def backoffLm(s: SparkSession, d: String,
-      persistTables: Boolean): DataFrame = {
-      def p(df: DataFrame): DataFrame =
-        if (persistTables) df.persistTracked() else df
+  /** x97 body. */
+  private def backoffLm(s: SparkSession, d: String): DataFrame = {
       val docs = documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 3)
@@ -66,13 +63,13 @@ object Ext25 {
           .as("g"))
         .groupBy(col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
         .agg(count(lit(1)).as("c3n"))
-      val bi = p(train.select(explode(expr(
+      val bi = train.select(explode(expr(
           "transform(sequence(1, size(w)-1), i -> struct(w[i-1] AS x, w[i] AS y))"))
           .as("g"))
         .groupBy(col("g.x").as("x"), col("g.y").as("y"))
-        .agg(count(lit(1)).as("c2")))
-      val uni = p(train.select(explode(col("w")).as("u"))
-        .groupBy(col("u")).agg(count(lit(1)).as("c1")))
+        .agg(count(lit(1)).as("c2"))
+      val uni = train.select(explode(col("w")).as("u"))
+        .groupBy(col("u")).agg(count(lit(1)).as("c1"))
       // Σc1 over the (small) unigram table — same value as re-exploding
       // the corpus for a global count, without the second corpus pass
       val nTrain = uni.agg(sum(col("c1")).as("n_train"))

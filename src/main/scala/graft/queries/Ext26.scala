@@ -31,7 +31,7 @@ object Ext26 {
     // Round 15: rollup persist dropped (the x85/x97/x116/x167 rule —
     // all three consumers share the rollup's own exchange, AQE stage
     // reuse dedupes; BENCH_AB_r15_rollups.json).
-    "x100_t_closeness" -> ((s, d) => tCloseness(s, d, persistRollup = false)),
+    "x100_t_closeness" -> ((s, d) => tCloseness(s, d)),
 
     // X6b MATRYOSHKA TRUNCATION AUDIT: recall@5 of the 16-dim PREFIX
     // cosine ranking against the full 64-dim ground truth, per query —
@@ -81,13 +81,11 @@ object Ext26 {
   private val nb16Sql =
     "list_reduce(list_prepend(0.0, list_transform(range(1, 17), i -> v[i]*v[i])), (a,b) -> a+b)"
 
-  /** x100 body with the round-15 rollup-persist knob. */
-  private[graft] def tCloseness(s: SparkSession, d: String,
-      persistRollup: Boolean): DataFrame = {
-      val per0 = customer(s, d)
+  /** x100 body. */
+  private def tCloseness(s: SparkSession, d: String): DataFrame = {
+      val per = customer(s, d)
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("cnt"))
-      val per = if (persistRollup) per0.persistTracked() else per0
       val glob = per.groupBy(col("c_mktsegment")).agg(sum(col("cnt")).as("gcnt"))
       val tot = glob.agg(sum(col("gcnt")).as("n_total"))
       val gs = per.groupBy(col("c_nationkey")).agg(sum(col("cnt")).as("n_g"))

@@ -38,9 +38,8 @@ object Ext28 {
       clusterPurityFrom(cellLabelContingency(s, d))),
   ) ++ moreQueries
 
-  /** x106 body over a (cell, label, n_cl) contingency frame — factored
-    * so the AbVariants persisted-contingency control shares it. */
-  private[graft] def clusterPurityFrom(ct: DataFrame): DataFrame = {
+  /** x106 body over a (cell, label, n_cl) contingency frame. */
+  private def clusterPurityFrom(ct: DataFrame): DataFrame = {
       val byCell = Window.partitionBy(col("cell"))
       val perCell = ct
         .withColumn("n", sum(col("n_cl")).over(byCell))
@@ -108,13 +107,13 @@ object Ext28 {
     * no-drift rule). The only corpus-scale work is the
     * partial-aggregable (cell, label) groupBy.
     *
-    * Round 15: persist default flipped to FALSE (the exchange-topped-
-    * rollup rule, BENCH_AB_r15_rollups2.json): x106's four references
-    * share the groupBy exchange via AQE stage reuse, and the Ext59
-    * callers collect the frame exactly once, so the persist never paid
+    * Round 15: the persist was dropped (the exchange-topped-rollup
+    * rule, BENCH_AB_r15_rollups2.json): x106's four references share
+    * the groupBy exchange via AQE stage reuse, and the Ext59 callers
+    * collect the frame exactly once, so the persist never paid
     * anywhere. */
-  private[graft] def cellLabelContingency(s: SparkSession, d: String,
-      persist: Boolean = false): DataFrame = {
+  private[graft] def cellLabelContingency(s: SparkSession,
+      d: String): DataFrame = {
     import graft.ext.IvfCentroids.{K, c}
     val withDots = embeddings(s, d)
       .select(col("vec_id"), col("label"),
@@ -127,10 +126,9 @@ object Ext28 {
       else when((k + 1 until K).map(j => col(s"d$k") >= col(s"d$j")).reduce(_ && _),
         lit(k)).otherwise(rest)
     }
-    val ct = withDots.select(cell.as("cell"), col("label"))
+    withDots.select(cell.as("cell"), col("label"))
       .groupBy(col("cell"), col("label"))
       .agg(count(lit(1)).as("n_cl"))
-    if (persist) ct.persistTracked() else ct
   }
 
   /** The DuckDB spelling of [[cellLabelContingency]]: CTEs `anchors`,

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{Quantile, TextOps}
+import graft.ext.TextOps
 import graft.tables.Tables._
 import graft.GraftCaches.TrackedPersist
 
@@ -23,24 +23,19 @@ object Ext32 {
     // X4y PERPLEXITY BUCKETS (CCNet head/middle/tail): score each doc
     // with x85's integer bigram-LM ppm, then split the corpus at the
     // EXACT global tercile thresholds and report each bucket's size and
-    // score range. The thresholds come from ext/Quantile's distributed
-    // nearest-rank selection (range sort + O(P) count exchange — never a
-    // global window or driver sort), then broadcast back as literals, so
-    // the bucketing pass is a pure per-row comparison. This is the CCNet
-    // partition step that routes head/middle/tail to different training
-    // mixes — on 100 TB the only heavy steps are the LM count shuffles
-    // and the one selection sort.
-    // Round-15 knobs (VERDICT r14 #5, BENCH_AB_r15_x116{,_confirm}.json):
+    // score range. The thresholds come from a value-bounded integer
+    // histogram of the scores (see [[perplexityBuckets]]), then go back
+    // as literals, so the bucketing pass is a pure per-row comparison.
+    // This is the CCNet partition step that routes head/middle/tail to
+    // different training mixes — on 100 TB the only heavy steps are the
+    // LM count shuffles and the histogram rollup.
+    // Round 15 (VERDICT r14 #5, BENCH_AB_r15_x116{,_confirm}.json):
     // terciles via the value-bounded integer-histogram selection (one
-    // partial-agg job instead of Quantile's range-sort + 2 jobs) and the
-    // c2 persist dropped (its two consumers share the groupBy exchange —
-    // AQE stage reuse dedupes them, the r14 x66/x138 rule). Same-boot
-    // min/median ~0.1–0.4 s better across two boots; hash-green.
-    "x116_perplexity_buckets" -> ((s, d) =>
-      perplexityBuckets(s, d, histSel = true, persistC2 = false)),
-
-    // (x116's body lives in [[perplexityBuckets]] below — round-15
-    // selection-knob refactor, VERDICT r14 #5.)
+    // partial-agg job instead of ext/Quantile's range-sort + 2 jobs) and
+    // the c2 persist dropped (its two consumers share the groupBy
+    // exchange — AQE stage reuse dedupes them, the r14 x66/x138 rule).
+    // Same-boot min/median ~0.1–0.4 s better across two boots; hash-green.
+    "x116_perplexity_buckets" -> ((s, d) => perplexityBuckets(s, d)),
 
     // X4z2 FEATURE-HASHED LINEAR CLASSIFIER: fastText-filter inference at
     // scan speed — every token hashes into a 64-bucket weight table (a
@@ -123,9 +118,9 @@ object Ext32 {
         .orderBy(col("problem"))
     }))
 
-  /** x116 body with the round-15 probe knobs (VERDICT r14 #5).
+  /** x116 body (round 15, VERDICT r14 #5).
     *
-    * histSel = true (adopted): the exact tercile thresholds come from an
+    * The exact tercile thresholds come from an
     * integer HISTOGRAM selection instead of ext/Quantile's range-sort —
     * scores are integer ppm in [0, 1e6], so `groupBy(score_ppm).count()`
     * is a VALUE-BOUNDED rollup (≤ 1e6 + 1 rows at ANY corpus size, the
@@ -137,13 +132,12 @@ object Ext32 {
     * jobs + its own RDD persist; at 100 TB the shuffle shrinks from all
     * per-doc rows to ≤ 1e6 (score, count) pairs with map-side combining.
     *
-    * persistC2 = false (adopted): c2 feeds the c1 rollup and the score
-    * join — the branches share the (l, r) groupBy's exchange, so AQE
-    * stage reuse dedupes them persist-free (the r14 x66/x138 rule);
-    * measured same-boot slightly ahead of the persisted form
+    * c2 is not persisted: it feeds the c1 rollup and the score join —
+    * the branches share the (l, r) groupBy's exchange, so AQE stage
+    * reuse dedupes them persist-free (the r14 x66/x138 rule); measured
+    * same-boot slightly ahead of the persisted form
     * (BENCH_AB_r15_x116.json). */
-  private[graft] def perplexityBuckets(s: SparkSession, d: String,
-      histSel: Boolean, persistC2: Boolean): DataFrame = {
+  private def perplexityBuckets(s: SparkSession, d: String): DataFrame = {
     val bg = documents(s, d)
       .select(col("doc_id"), TextOps.words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
@@ -152,8 +146,7 @@ object Ext32 {
         .as("p"))
       .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))
       .persistTracked()
-    val c2base = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
-    val c2 = if (persistC2) c2base.persistTracked() else c2base
+    val c2 = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
     // c1(l) = Σ_r c2(l, r) exactly — rolled up from the already-reduced
     // bigram table instead of a second corpus-scale shuffle of bg
     val c1 = c2.groupBy(col("l")).agg(sum(col("c2")).as("c1"))
@@ -165,24 +158,17 @@ object Ext32 {
       .select(col("doc_id"), col("n_bigrams"),
         expr("sum_ppm div n_bigrams").as("score_ppm"))
       .persistTracked()
-    val (t1, t2) =
-      if (histSel) {
-        val hist = scored.groupBy(col("score_ppm"))
-          .agg(count(lit(1)).as("cnt"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        val n = hist.map(_._2).sum
-        require(n > 0, "perplexityBuckets over an empty corpus")
-        def rank(p: Double): Long = math.max(1L, math.ceil(p * n).toLong)
-        def pick(r: Long): Long = {
-          var cum = 0L
-          hist.find { case (_, c) => cum += c; cum >= r }.get._1
-        }
-        (pick(rank(1.0 / 3)), pick(rank(2.0 / 3)))
-      } else {
-        val (_, ts) = Quantile.nearestRank(scored, col("score_ppm"),
-          Seq(1.0 / 3, 2.0 / 3))
-        (ts(0).toLong, ts(1).toLong)
-      }
+    val hist = scored.groupBy(col("score_ppm"))
+      .agg(count(lit(1)).as("cnt"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val n = hist.map(_._2).sum
+    require(n > 0, "perplexityBuckets over an empty corpus")
+    def rank(p: Double): Long = math.max(1L, math.ceil(p * n).toLong)
+    def pick(r: Long): Long = {
+      var cum = 0L
+      hist.find { case (_, c) => cum += c; cum >= r }.get._1
+    }
+    val (t1, t2) = (pick(rank(1.0 / 3)), pick(rank(2.0 / 3)))
     scored
       .withColumn("bucket",
         when(col("score_ppm") <= t1, "tail")

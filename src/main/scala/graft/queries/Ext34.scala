@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.GraftCaches.TrackedPersist
 
 /** Round-5 additions, part 12: two data-quality audits in exact integer
   * arithmetic — a χ² independence test over a categorical contingency
@@ -32,7 +31,7 @@ object Ext34 {
     // all four consumers share the contingency rollup's own exchange,
     // AQE stage reuse dedupes; BENCH_AB_r15_rollups.json).
     "x122_chi2_independence" -> ((s, d) =>
-      chi2Independence(s, d, persistRollup = false)),
+      chi2Independence(s, d)),
 
     // X8e BENFORD LEADING-DIGIT AUDIT: the first significant digit of
     // o_totalprice against Benford's law — the classic synthetic-data /
@@ -58,13 +57,11 @@ object Ext34 {
         .orderBy(col("digit"))
     }))
 
-  /** x122 body with the round-15 rollup-persist knob. */
-  private[graft] def chi2Independence(s: SparkSession, d: String,
-      persistRollup: Boolean): DataFrame = {
-      val cells0 = documents(s, d)
+  /** x122 body. */
+  private def chi2Independence(s: SparkSession, d: String): DataFrame = {
+      val cells = documents(s, d)
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("o"))
-      val cells = if (persistRollup) cells0.persistTracked() else cells0
       val rows = cells.groupBy(col("source")).agg(sum(col("o")).as("r"))
       val cols = cells.groupBy(col("lang")).agg(sum(col("o")).as("c"))
       val n = cells.agg(sum(col("o")).as("n"))

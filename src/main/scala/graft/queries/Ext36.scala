@@ -87,7 +87,7 @@ object Ext36 {
     // both consumers share the per-source rollup's own exchange, AQE
     // stage reuse dedupes; BENCH_AB_r15_rollups.json).
     "x129_dataset_merkle" -> ((s, d) =>
-      datasetMerkle(s, d, persistRollup = false)),
+      datasetMerkle(s, d)),
 
     // X3g GREEDY MMR SELECTION: pick k=4 exemplars balancing relevance
     // (dot with the corpus centroid) against redundancy (max dot with
@@ -147,15 +147,12 @@ object Ext36 {
     // Round 15: baskets persist dropped (the exchange-topped-rollup
     // rule; BENCH_AB_r15_rollups3.json) — all four consumers share the
     // distinct's exchange.
-    "x131_cooccurrence_lift" -> ((s, d) =>
-      cooccurrenceLift(s, d, persistBaskets = false)))
+    "x131_cooccurrence_lift" -> ((s, d) => cooccurrenceLift(s, d)))
 
-  /** x131 body with the round-15 baskets-persist knob. */
-  private[graft] def cooccurrenceLift(s: SparkSession, d: String,
-      persistBaskets: Boolean): DataFrame = {
-      val baskets0 = events(s, d)
+  /** x131 body. */
+  private def cooccurrenceLift(s: SparkSession, d: String): DataFrame = {
+      val baskets = events(s, d)
         .select(col("user_id"), col("event_type")).distinct()
-      val baskets = if (persistBaskets) baskets0.persistTracked() else baskets0
       val users = baskets.select(col("user_id")).distinct()
         .agg(count(lit(1)).as("u"))
       val singles = baskets.groupBy(col("event_type"))
@@ -175,16 +172,14 @@ object Ext36 {
         .orderBy(col("type_a"), col("type_b"))
   }
 
-  /** x129 body with the round-15 rollup-persist knob. */
-  private[graft] def datasetMerkle(s: SparkSession, d: String,
-      persistRollup: Boolean): DataFrame = {
+  /** x129 body. */
+  private def datasetMerkle(s: SparkSession, d: String): DataFrame = {
       val rowH = expr(
         "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', text)), 1, 15), 16, 10) AS BIGINT)")
-      val per0 = documents(s, d)
+      val per = documents(s, d)
         .select(col("source"), rowH.as("h"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("fp"))
-      val per = if (persistRollup) per0.persistTracked() else per0
       val root = per.agg(sum(col("n_rows")).as("n_rows"),
           expr("bit_xor(fp)").as("fp"))
         .select(lit("__root__").as("source"), col("n_rows"), col("fp"))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.GraftCaches.TrackedPersist
 import graft.ext.TextOps
 
 /** Round-5 additions, part 16: hybrid-retrieval rank fusion and the
@@ -51,13 +50,11 @@ object Ext38 {
     // bench side is 1% of the corpus, so it shuffles rather than
     // broadcasts); the waterfall arithmetic then runs on the bounded
     // 5-row stage frame.
-    "x136_filter_waterfall" -> ((s, d) =>
-      filterWaterfall(s, d, persistRollup = false)),
+    "x136_filter_waterfall" -> ((s, d) => filterWaterfall(s, d)),
   )
 
-  /** x136 body with the round-15 rollup-persist knob. */
-  private[graft] def filterWaterfall(s: SparkSession, d: String,
-      persistRollup: Boolean): DataFrame = {
+  /** x136 body. */
+  private def filterWaterfall(s: SparkSession, d: String): DataFrame = {
       import s.implicits._
       val stops = Seq("the", "and", "of", "to", "a")
       val w = TextOps.words(col("text"))
@@ -96,8 +93,7 @@ object Ext38 {
       // both consumers share the 6-row stage rollup's own exchange, AQE
       // stage reuse dedupes; BENCH_AB_r15_rollups.json). The heavy
       // flagged pipeline above runs once either way.
-      val drops0 = flagged.groupBy(col("first_fail")).agg(count(lit(1)).as("n"))
-      val drops = if (persistRollup) drops0.persistTracked() else drops0
+      val drops = flagged.groupBy(col("first_fail")).agg(count(lit(1)).as("n"))
       val total = drops.agg(sum(col("n")).as("n_total"))
       val stages = Seq((1, "lang_en"), (2, "length"), (3, "quality"),
         (4, "dedup"), (5, "decontam")).toDF("stage_no", "stage")

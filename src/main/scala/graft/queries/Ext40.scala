@@ -89,12 +89,10 @@ object Ext40 {
   // persist only adds a materialization barrier. (The old "union
   // branches only share work via a cached source" rule predates AQE
   // stage reuse; it still holds for exchange-LESS shared subtrees —
-  // see q9.) persistPairs = true kept callable as the A/B arm.
-  private[graft] def labelPropagation(s: SparkSession, d: String,
-      persistPairs: Boolean = false): DataFrame = {
-    val pairs0 = Ext.lshVerifiedPairs(s, d, 0.5)
+  // see q9.)
+  private def labelPropagation(s: SparkSession, d: String): DataFrame = {
+    val pairs = Ext.lshVerifiedPairs(s, d, 0.5)
       .select(col("id1"), col("id2"))
-    val pairs = if (persistPairs) pairs0.persistTracked() else pairs0
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .unionByName(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .persistTracked()

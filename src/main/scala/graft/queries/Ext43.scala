@@ -60,50 +60,25 @@ object Ext43 {
   // Rank-block kNN edges: block = seq div blk; probe meets its own
   // and the NEXT block (both directions covered after symmetrize);
   // extracted from beamAnn verbatim so the layered scheduled form
-  // (BeamSchedule) shares the exact same graph construction
+  // (BeamSchedule) shares the exact same graph construction. The block
+  // join carries the q payload; the ids-only spelling that attaches q
+  // afterward by key (the 100 TB wire weight: 16 B pairs, not 512 B
+  // payloads) MEASURED SLOWER at sf0.1 (21 s vs 14 s,
+  // BENCH_AB_r06_x143.json) — at toy scale the extra joins/stages cost
+  // more than the payload width; revisit at real scale.
   private[graft] def knnEdges(frame: DataFrame, seqCols: Seq[String],
-      blk: Int, m: Int, narrowShuffles: Boolean): DataFrame = {
-    // narrowShuffles=true carries ONLY ids through the block join
-    // and attaches q afterward by key — the 100 TB spelling (wire
-    // weight = 16 B pairs, not 512 B payloads). MEASURED SLOWER at
-    // sf0.1 (21 s vs 14 s, BENCH_AB_r06_x143.json): at toy scale
-    // the extra joins/stages cost more than the payload width, so
-    // the catalog default stays false; flip at real scale.
-    if (!narrowShuffles) { // payload-carrying band join
-      val bands = seqCols.map { sc =>
-        val probe = frame.select(col("vec_id").as("src"), col("q").as("qa"),
-          explode(array(expr(s"$sc div $blk"), expr(s"$sc div $blk + 1")))
-            .as("k"))
-        val build = frame.select(col("vec_id").as("dst"), col("q").as("qb"),
-          expr(s"$sc div $blk").as("k"))
-        probe.join(build, "k").filter(col("src") =!= col("dst"))
-          .select(col("src"), col("dst"), idist2(col("qa"), col("qb")).as("w"))
-      }
-      return bands.reduce(_ union _)
-        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("src")).orderBy(col("w"), col("dst"))))
-        .filter(col("rn") <= m).select(col("src"), col("dst"))
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("ed"))
-        .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
-        .distinct()
-    }
-    val pairs = seqCols.map { sc =>
-      val probe = frame.select(col("vec_id").as("src"),
+      blk: Int, m: Int): DataFrame = {
+    val bands = seqCols.map { sc =>
+      val probe = frame.select(col("vec_id").as("src"), col("q").as("qa"),
         explode(array(expr(s"$sc div $blk"), expr(s"$sc div $blk + 1")))
           .as("k"))
-      val build = frame.select(col("vec_id").as("dst"),
+      val build = frame.select(col("vec_id").as("dst"), col("q").as("qb"),
         expr(s"$sc div $blk").as("k"))
       probe.join(build, "k").filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-    }.reduce(_ union _).distinct()
-    val qv = frame.select(col("vec_id"), col("q"))
-    pairs
-      .join(qv.select(col("vec_id").as("src"), col("q").as("qa")), "src")
-      .join(qv.select(col("vec_id").as("dst"), col("q").as("qb")), "dst")
-      .select(col("src"), col("dst"), idist2(col("qa"), col("qb")).as("w"))
+        .select(col("src"), col("dst"), idist2(col("qa"), col("qb")).as("w"))
+    }
+    bands.reduce(_ union _)
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("w"), col("dst"))))
       .filter(col("rn") <= m).select(col("src"), col("dst"))
@@ -116,9 +91,7 @@ object Ext43 {
       .distinct()
   }
 
-  // X3j GRAPH-ANN BEAM SEARCH (HNSW-lite): two navigable layers —
-  // layer 1 is a deterministic 1/8 sample (vec_id % 8 = 0, HNSW's
-  // level assignment without the RNG). Graph construction is
+  // X3j GRAPH-ANN BEAM SEARCH (flat NSW): graph construction is
   // RANK-BLOCK candidate generation, the 100 TB-safe spelling: nodes
   // are globally ranked by (SRP band, integer projection) via
   // GlobalSeq (range sort + O(P) offset exchange — NO corpus-scale
@@ -129,14 +102,13 @@ object Ext43 {
   // corpus puts half of all vectors in one bucket). Two independent
   // bands rescue nodes isolated in one band. Per-node nearest-16 by
   // exact dist², then symmetrized (undirected NSW navigation).
-  // Search descends: beam over the coarse layer (2 hops, width 12),
-  // refine on the full layer (3 hops, width 32); each hop is ONE
-  // equi-join on src + exact rescoring + a top-B cut (dist² asc, id
-  // asc); the tiny beam persists per hop (lineage truncation —
-  // uncached, the plan doubles per hop and Catalyst analysis goes
-  // exponential). Per-hop work is |beam|·M rows per query; window
-  // frames bounded at B(1+M). A bigger corpus adds layers (log n)
-  // via the knob parameters, not the catalog's fixed hops.
+  // Search: 16 stride entries over the s0 rank, a width-8 entry beam,
+  // then 4 hops of width 32; each hop is ONE equi-join on src + exact
+  // rescoring + a top-B cut (dist² asc, id asc); the tiny beam
+  // persists per hop (lineage truncation — uncached, the plan doubles
+  // per hop and Catalyst analysis goes exponential). Per-hop work is
+  // |beam|·M rows per query; window frames bounded at B(1+M). A bigger
+  // corpus adds layers (log n) via BeamSchedule, not fixed hops here.
   // KNOB PROVENANCE (round 8, closes the r7 recall valley): the r7
   // knobs (blk 64, 12-NN, widths 12/6/4) measured held-out recall@3
   // (x146) of 0.93 / 1.00 / 0.70 at sf0.001/0.01/0.1 — the sf0.1
@@ -145,96 +117,39 @@ object Ext43 {
   // with widths 32/12/8 the measured recall is 0.95 / 1.00 / 1.00,
   // AND the denser graph converges faster (fewer re-expansions), so
   // the richer construction is not a toy-scale cost regression
-  // (same-boot record BENCH_AB_r08_x143_knobs.json; RecallProbe is
-  // the sweep harness). Self-recall@1 remains 1.0 at all SFs (the
-  // query's own node is retrieved from distance 0).
+  // (same-boot record BENCH_AB_r08_x143_knobs.json). Self-recall@1
+  // remains 1.0 at all SFs (the query's own node is retrieved from
+  // distance 0). The rank chain is persist-free: caching the quantized
+  // projection and/or the inner ranked frame measured neutral (r8, r14;
+  // BENCH_AB_r08_x143_persist.json, BENCH_AB_r14_x143lincut.json), and
+  // both one-child-execution GlobalSeq redesigns measured SLOWER
+  // (BENCH_AB_r15_globalseq.json).
+  //
+  // `lineageCutHops = false` is the uncut hop chain Ext43Spec checks the
+  // catalog's per-hop lineage cut against; `perturbQueries` selects
+  // x146's held-out queries.
   private[graft] def beamAnn(s: SparkSession, d: String,
-      twoBands: Boolean, coarseLayer: Boolean = true,
-      narrowShuffles: Boolean = false,
-      narrowRank: Boolean = false,
-      nEntries: Int = 16, coarseHops: Int = 2, fullHops: Int = 3,
-      bFull: Int = 32, bCoarse: Int = 12, bEntry: Int = 8,
-      blkFull: Int = 128, mFull: Int = 16, bands3: Boolean = false,
-      hopPersist: Boolean = true,
-      persistQuant: Boolean = false, persistRank: Boolean = false,
-      lineageCutHops: Boolean = false,
+      lineageCutHops: Boolean = true,
       perturbQueries: Boolean = false): DataFrame = {
-      // the narrow-rank branch computes only the s0/s1 rank joins — it
-      // has no b3/p2 path, so a third band there would reference an
-      // unresolved column at analysis time; reject the combination
-      // loudly (review finding, round 8)
-      require(!(bands3 && (narrowShuffles || narrowRank)),
-        "bands3 is only implemented for the wide-rank construction")
       val code = (0 until 16).map { p =>
         when(iproj(col("q"), p) > 0, lit(1L << p)).otherwise(lit(0L))
       }.reduce(_ + _)
-      val e00 = quantized(s, d)
+      val e0 = quantized(s, d)
         .withColumn("b1", code.bitwiseAND(lit(15L)))
         .withColumn("b2", shiftright(code, 4).bitwiseAND(lit(15L)))
         .withColumn("p0", iproj(col("q"), 16))
         .withColumn("p1", iproj(col("q"), 17))
-      val e0 = if (bands3) e00
-        .withColumn("b3", shiftright(code, 8).bitwiseAND(lit(15L)))
-        .withColumn("p2", iproj(col("q"), 18))
-      else e00
-      // rank NARROW (vec_id, band, projection) frames and join the seq
-      // back by key: the range sorts then move 3 longs per row instead
-      // of rows carrying the 64-long q array — at any scale the sort
-      // weight is the rank key, not the payload
-      val e = (if (narrowShuffles || narrowRank) {
-        // cache the projected base FIRST: without it the 16-fold SRP
-        // code recomputes once per narrow selection and the join side
-        val base = e0.persistTracked()
-        val r0 = GlobalSeq.withSeq(
-            base.select(col("vec_id"), col("b1"), col("p0")),
-            Seq(col("b1"), col("p0"), col("vec_id")), "s0")
-          .select(col("vec_id"), col("s0"))
-        val r1 = GlobalSeq.withSeq(
-            base.select(col("vec_id"), col("b2"), col("p1")),
-            Seq(col("b2"), col("p1"), col("vec_id")), "s1")
-          .select(col("vec_id"), col("s1"))
-        base.join(r0, "vec_id").join(r1, "vec_id")
-      } else {
-        // VERDICT r7 #3 probe knobs: the rank chain's zipWithIndex runs
-        // range sampling + an eager count job per level and the consumer
-        // re-runs the reduce side (the CHILD itself is bounded at one
-        // map pass by shuffle reuse — GlobalSeqSpec pins it). These
-        // persists probed caching (a) the quantized projection and (b)
-        // the inner ranked frame — both measured neutral (r8, r14), and
-        // the r15 one-child-execution GlobalSeq redesigns both measured
-        // SLOWER (BENCH_AB_r15_globalseq.json), so the persist-free
-        // zip chain stays. persistQuant caches the quantized projection
-        // before the chain; persistRank additionally caches the inner
-        // ranked frame.
-        val eq = if (persistQuant) e0.persistTracked() else e0
-        val one =
-          GlobalSeq.withSeq(eq, Seq(col("b1"), col("p0"), col("vec_id")), "s0")
-        val oneR = if (persistRank) one.persistTracked() else one
-        val two = GlobalSeq.withSeq(
-          oneR, Seq(col("b2"), col("p1"), col("vec_id")), "s1")
-        if (bands3) GlobalSeq.withSeq(two,
-          Seq(col("b3"), col("p2"), col("vec_id")), "s2")
-        else two
-      }).persistTracked() // one frame, independent rank orders
-      val fullSeqs = if (bands3) Seq("s0", "s1", "s2")
-        else if (twoBands) Seq("s0", "s1") else Seq("s0")
-      val edges0 = knnEdges(e, fullSeqs, blkFull, mFull, narrowShuffles)
-        .persistTracked()
-      // coarse layer: re-rank the sample so its blocks are dense
-      lazy val e1 = GlobalSeq.withSeq(
-          e.filter(col("vec_id") % 8 === 0)
-            .select(col("vec_id"), col("q"), col("b1"), col("p0")),
-          Seq(col("b1"), col("p0"), col("vec_id")), "sc")
-        .persistTracked()
-      lazy val edges1 = knnEdges(e1, Seq("sc"), 16, 6, narrowShuffles)
-        .persistTracked()
+      val e = GlobalSeq.withSeq(
+          GlobalSeq.withSeq(e0, Seq(col("b1"), col("p0"), col("vec_id")), "s0"),
+          Seq(col("b2"), col("p1"), col("vec_id")), "s1")
+        .persistTracked() // one frame, independent rank orders
+      val edges0 = knnEdges(e, Seq("s0", "s1"), 128, 16).persistTracked()
       // entry points: ~16 nodes evenly spaced in rank order — diverse
       // starts stand in for the layers above the top one
-      val entFrame = if (coarseLayer) e1.select(col("vec_id"), col("sc"))
-        else e.select(col("vec_id"), col("s0").as("sc"))
+      val entFrame = e.select(col("vec_id"), col("s0").as("sc"))
       val n1 = entFrame.agg(count(lit(1)).as("n1"))
       val entries = entFrame.crossJoin(n1)
-        .filter(col("sc") % greatest(expr(s"n1 div $nEntries"), lit(1L)) === 0)
+        .filter(col("sc") % greatest(expr("n1 div 16"), lit(1L)) === 0)
         .select(col("vec_id").as("id"))
       // perturbQueries = held-out audit mode (x146): the query vectors
       // are deterministic NON-members — each dim shifted by a
@@ -257,17 +172,17 @@ object Ext43 {
             Window.partitionBy(col("q_id"))
               .orderBy(col("dist2"), col("id"))))
           .filter(col("rn") <= b)
-      def hop(beam0: DataFrame, edges: DataFrame, b: Int): DataFrame = {
+      def hop(beam0: DataFrame): DataFrame = {
         // lineage truncation per hop: `beam0` appears TWICE below (kept ∪
         // expanded), so an uncached chain DOUBLES the logical plan each
         // round — Catalyst analysis goes exponential in hop count (the
         // same plan-growth class as iterative CC, Components.scala).
         // Persisting the ≤ |Q|·B-row frame keeps the plan linear.
-        val beam = if (hopPersist) beam0.persistTracked() else beam0
+        val beam = beam0.persistTracked()
         val expanded = beam
-          .join(edges, col("id") === col("src"))
+          .join(edges0, col("id") === col("src"))
           .select(col("q_id"), col("dst").as("id"))
-        val out = topB(score(beam.union(expanded).distinct()), b)
+        val out = topB(score(beam.union(expanded).distinct()), 32)
           .select(col("q_id"), col("id"))
         // per-hop LOGICAL lineage cut (BeamSchedule's round-14 pattern):
         // the next hop references this frame twice, so the analyzed plan
@@ -277,38 +192,29 @@ object Ext43 {
         else out
       }
       var beam = topB(score(
-        qs.select(col("q_id")).crossJoin(broadcast(entries))), bEntry)
+        qs.select(col("q_id")).crossJoin(broadcast(entries))), 8)
         .select(col("q_id"), col("id"))
-      if (coarseLayer) {
-        for (_ <- 1 to coarseHops) beam = hop(beam, edges1, bCoarse) // coarse layer
-        for (_ <- 1 to fullHops) beam = hop(beam, edges0, bFull) // full layer
-      } else {
-        for (_ <- 1 to fullHops + 1) beam = hop(beam, edges0, bFull) // flat NSW
-      }
+      for (_ <- 1 to 4) beam = hop(beam)
       topB(score(beam), 3)
         .select(col("q_id"), col("rn").cast("long").as("rank"),
           col("id").as("vec_id"), col("dist2"))
         .orderBy(col("q_id"), col("rank"))
   }
 
-  private[graft] def beamAnnNarrowRank(s: SparkSession, d: String): DataFrame =
-    beamAnn(s, d, twoBands = true, coarseLayer = true,
-      narrowShuffles = false, narrowRank = true)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Round-12 cost decision (VERDICT r11 #2): the catalog search is
     // the FLAT NSW form — no coarse layer, 4 full-layer hops. At this
     // corpus (n = 2k vectors, 16 stride entries) the flat walk reaches
     // the same neighborhoods: held-out recall@3 is IDENTICAL to the
-    // two-layer form at all 3 SFs (0.950/1.000/1.000, RecallProbe
-    // round-12 sweep) while the coarse layer's construction (an extra
+    // two-layer form at all 3 SFs (0.950/1.000/1.000, round-12 recall
+    // sweep) while the coarse layer's construction (an extra
     // GlobalSeq rank sort + block join + 2 hops on edges1) was ~37% of
     // the query: same-boot min-of-5 7.78 s flat vs 12.38 s two-layer
     // (BENCH_AB_r12_x143cost.json; controls x9/x40/x3 flat). The
     // layered descent is a log-n NAVIGATION accelerator — at this n it
     // buys nothing; at real scale layers return via BeamSchedule
-    // .scheduleFor(n) (the recall-at-scale contract, kept callable as
-    // x143_beam_ann__scheduled with its 30k-vector spec). blk 32/64
+    // .scheduleFor(n) (the recall-at-scale contract, checked by
+    // BeamScheduleSpec at 30k vectors). blk 32/64
     // also measured: cheaper graphs REGRESS recall (0.833/0.908 at
     // sf0.1) — rejected, recorded in the same A/B.
     // Round 14 (optimization): per-hop LOGICAL lineage cut adopted —
@@ -319,8 +225,7 @@ object Ext43 {
     // 7.34 s min-of-5 same-boot (BENCH_AB_r14_x143lincut.json; the
     // construction persists re-probed on the flat form stay neutral,
     // same record).
-    "x143_beam_ann" -> ((s, d) => beamAnn(s, d, twoBands = true,
-      coarseLayer = false, lineageCutHops = true)),
+    "x143_beam_ann" -> ((s, d) => beamAnn(s, d)),
 
     // X3k HELD-OUT RECALL AUDIT for the beam ANN (x90's contract):
     // score the graph search against brute-force ground truth for
@@ -341,7 +246,11 @@ object Ext43 {
     // 5.78/5.49 s (BENCH_AB_r15_noaqecons{,_confirm}.json, ~1.4×). x143
     // measured the OPPOSITE (no independent arm to overlap, and its lazy
     // hop chain loses AQE coalescing: 10.7 vs 5.9 s) and keeps the eager
-    // form — the __aqecons/__noaqecons variants hold both controls.
+    // form.
+    // The toggle mutates the SHARED session's conf, so it assumes
+    // catalog entries are constructed one at a time on that session: a
+    // query constructed concurrently on another thread would see AQE
+    // off too. (Replacing the toggle is a separate change.)
     "x146_beam_recall" -> ((s, d) => {
       val prev = s.conf.get("spark.sql.adaptive.enabled", "true")
       s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -349,7 +258,7 @@ object Ext43 {
       finally s.conf.set("spark.sql.adaptive.enabled", prev)
     }))
 
-  private[queries] def x146Body(s: SparkSession, d: String): DataFrame = {
+  private def x146Body(s: SparkSession, d: String): DataFrame = {
       val e0 = quantized(s, d).persistTracked()
       val qs = e0.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("q_id"), expr(PerturbSql).as("qq"))
@@ -360,8 +269,7 @@ object Ext43 {
           Window.partitionBy(col("q_id"))
             .orderBy(col("dist2"), col("vec_id"))))
         .filter(col("rn") <= 3).select(col("q_id"), col("vec_id"))
-      val beam3 = beamAnn(s, d, twoBands = true, coarseLayer = false,
-        lineageCutHops = true, perturbQueries = true)
+      val beam3 = beamAnn(s, d, perturbQueries = true)
         .select(col("q_id"), col("vec_id"))
       val hits = beam3.join(gt, Seq("q_id", "vec_id"))
         .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))

@@ -118,10 +118,9 @@ object Ext46 {
       // arithmetic on the collected O(arms²) rows (the BPE-argmax
       // precedent: bounded driver state, zero distributed stages for
       // the iteration). Same-boot A/B of the fully distributed rounds
-      // (broadcast and SMJ forms, kept in AbVariants): 3.8 s / 3.0 s at
-      // sf0.1 vs 1.09 s for this form (BENCH_AB_r07_x151.json) — the
-      // rounds are pure sequential stage overhead at any scale where
-      // arms is bounded.
+      // (broadcast and SMJ forms): 3.8 s / 3.0 s at sf0.1 vs 1.09 s for
+      // this form (BENCH_AB_r07_x151.json) — the rounds are pure
+      // sequential stage overhead at any scale where arms is bounded.
       val pairRows = btPairs(s, d).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
       val byI = pairRows.groupBy(_._1)
@@ -208,15 +207,15 @@ object Ext46 {
     }),
   )
 
-  /** x152 body. `persistPairs = true` is the retained NEGATIVE result
-    * (AbVariants "__persist"): caching the pair frame LOSES same-boot
-    * at sf0.1 (1.92 vs 1.70 s min-of-3, BENCH_AB_r07_x152.json) — the
-    * three consumers prune DIFFERENT columns (w / rw / sizes), so
+  /** x152 body. `nativeGrams = false` is the interpreted HOF pyramid,
+    * the reference Ext46Spec compares the catalog path against. The
+    * pair frame is not persisted: caching it LOST same-boot at sf0.1
+    * (1.92 vs 1.70 s min-of-3, BENCH_AB_r07_x152.json) — the three
+    * consumers prune DIFFERENT columns (w / rw / sizes), so
     * column-pruned rescans move less data than one full-width cached
     * frame, and at corpus scale a 2-sided text frame does not belong
     * in executor memory anyway. */
   private[graft] def bleuPrecision(s: SparkSession, d: String,
-      persistPairs: Boolean = false,
       nativeGrams: Boolean = true): DataFrame = {
       val docs = documents(s, d)
         .select(col("doc_id"), col("source"), TextOps.words(col("text")).as("w"))
@@ -224,8 +223,7 @@ object Ext46 {
         .select(col("doc_id").as("pair_id"), col("source"), col("w"))
       val ref = docs.filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 1L).as("pair_id"), col("w").as("rw"))
-      val pairs0 = cand.join(ref, Seq("pair_id"))
-      val pairs = if (persistPairs) pairs0.persistTracked() else pairs0
+      val pairs = cand.join(ref, Seq("pair_id"))
       val cc = wordGramRows(pairs, "w", nativeGrams,
         col("pair_id"), col("source"))
         .groupBy(col("pair_id"), col("source"), col("n"), col("g"))
@@ -258,9 +256,9 @@ object Ext46 {
     * x171 (the one-helper-not-copies rule). The catalog path is the
     * native [[TextOps.wordGramsAll]] generator (the GraftCharGrams
     * adoption, word-gram edition — BENCH_AB_r10_wordgram.json);
-    * `native = false` is the interpreted HOF pyramid kept as the
-    * __hofgrams control. Tokens come from split(text, ' ') so the
-    * space-join is injective per n. */
+    * `native = false` is the interpreted HOF pyramid, the reference the
+    * Ext46/Ext51 specs compare the native path against. Tokens come
+    * from split(text, ' ') so the space-join is injective per n. */
   private[graft] def wordGramRows(df: DataFrame, wc: String,
       native: Boolean, keep: Column*): DataFrame =
     if (native)
@@ -305,54 +303,6 @@ object Ext46 {
         (lit(1L) - col("win_a")).as("wi")))
     dir.groupBy(col("i"), col("j"))
       .agg((count(lit(1)) + 2L).as("n_ij"), (sum(col("wi")) + 1L).as("w_ij"))
-  }
-
-  /** x151 body; `broadcastRounds = false` is the retained A/B control
-    * (SMJ rounds, no iterate persist) — see AbVariants. */
-  /** The fully DISTRIBUTED MM rounds — retained only as the A/B control
-    * (AbVariants "__dist"/"__smj"): same-boot min-of-3 at sf0.1 shows
-    * the broadcast / SMJ round forms cost 3.8 / 3.0 s vs 1.09 s for the
-    * catalog's driver-rounds form — the iteration is bounded by arms²,
-    * so distributing it buys nothing but sequential stage overhead. */
-  private[graft] def bradleyTerry(s: SparkSession, d: String,
-      broadcastRounds: Boolean = true): DataFrame = {
-      val pairs = btPairs(s, d).persistTracked()
-      // raw (unsmoothed) per-arm counts, for reporting only
-      val raw = pairs.groupBy(col("i"))
-        .agg(sum(col("n_ij") - 2L).as("n_battles"),
-          sum(col("w_ij") - 1L).as("n_wins"))
-      // smoothed win totals, the MM numerator
-      val wins = pairs.groupBy(col("i"))
-        .agg(sum(col("w_ij")).as("w_tot"))
-        .persistTracked()
-      var r = wins.select(col("i").as("item"), lit(1000000L).as("r"))
-      // the rating frame is |arms|-bounded (arms = models) — broadcast
-      // it into every round so no MM iteration ever exchanges the pair
-      // frame again, and persist the O(|arms|) iterate so each round's
-      // plan does not re-evaluate the whole previous-round chain (the
-      // x143 hop-persist lesson)
-      def bc(df: DataFrame): DataFrame =
-        if (broadcastRounds) broadcast(df) else df
-      for (_ <- 1 to 3) {
-        val denom = pairs
-          .join(bc(r.select(col("item").as("i"), col("r").as("ri"))), Seq("i"))
-          .join(bc(r.select(col("item").as("j"), col("r").as("rj"))), Seq("j"))
-          .select(col("i"),
-            expr("n_ij * 1000000000000L div greatest(ri + rj, 1L)").as("t"))
-          .groupBy(col("i")).agg(sum(col("t")).as("den"))
-        r = wins.join(bc(denom), Seq("i"))
-          .select(col("i").as("item"),
-            expr("w_tot * 1000000000000L div greatest(den, 1L)").as("r"))
-        if (broadcastRounds) r = r.persistTracked()
-      }
-      val tot = r.agg(sum(col("r")).as("rsum"))
-      r.crossJoin(broadcast(tot))
-        .join(raw.select(col("i").as("item"), col("n_battles"), col("n_wins")),
-          Seq("item"))
-        .select(col("item"), col("n_battles"), col("n_wins"),
-          col("r").as("r_ppm"),
-          expr("r * 1000000L div greatest(rsum, 1L)").as("score_ppm"))
-        .orderBy(col("item"))
   }
 
   val oracleSql: Map[String, String] = Map(

@@ -61,33 +61,14 @@ object Ext47 {
     * (max ~110 tokens). */
   val LcsCap = 992
 
-  /** The round-8 two-limb window, kept for the `__2limb` AbVariants
-    * (same-boot cost control for the k-limb generalization). */
-  private[graft] val LcsCap2Limb = 124
-
-  /** Match masks shared by the LCS and WER folds, one {hi, lo} struct
-    * per candidate token: the set bits of its occurrences in the
-    * reference, split lo = positions 1..62, hi = 63..124. Nested IFs
-    * (not AND) guarantee element_at is only evaluated in-bounds under
-    * ANSI. ONE definition — the two kernels must never drift on the
-    * limb split (review finding, round 8). */
-  private val sparkMasksSql: String =
-    """transform(cw, c -> named_struct(
-      |    'hi', aggregate(sequence(1, greatest(size(rw), 1)), 0L, (a, j) ->
-      |      a + IF(j > 62 AND j <= size(rw),
-      |            IF(element_at(rw, j) = c, shiftleft(1L, j - 63), 0L), 0L)),
-      |    'lo', aggregate(sequence(1, greatest(size(rw), 1)), 0L, (a, j) ->
-      |      a + IF(j <= least(size(rw), 62),
-      |            IF(element_at(rw, j) = c, shiftleft(1L, j - 1), 0L), 0L))))"""
-      .stripMargin
-
-  /** Candidate/reference token pairing shared by x154 and x156 (odd
-    * doc_id = candidate, doc_id − 1 = reference; both sides windowed to
-    * `cap` with the truncation flags kept). The k-limb folds also need
-    * `m` (reference length) and `nl` (per-pair limb count) as pair
-    * columns referenced from inside the fold lambdas. */
-  private[queries] def pairedTokens(s: SparkSession, d: String,
-      cap: Int): DataFrame = {
+  /** Candidate/reference token pairing shared by x154, x156 and x170
+    * (odd doc_id = candidate, doc_id − 1 = reference; both sides
+    * windowed to [[LcsCap]] with the truncation flags kept). The
+    * k-limb folds also need `m` (reference length) and `nl` (per-pair
+    * limb count) as pair columns referenced from inside the fold
+    * lambdas. */
+  private[queries] def pairedTokens(s: SparkSession, d: String): DataFrame = {
+    val cap = LcsCap
     val docs = documents(s, d)
       .select(col("doc_id"), col("source"), TextOps.words(col("text")).as("w"))
     val cand = docs.filter(col("doc_id") % 2 === 1)
@@ -104,75 +85,28 @@ object Ext47 {
         expr("CAST(greatest((m + 61L) div 62L, 1L) AS INT)"))
   }
 
-  /** The two-limb Allison–Dix fold as one Spark SQL expression over
-    * pair columns `cw` (candidate tokens, ≤ LcsCap) and `rw`
-    * (reference tokens, ≤ LcsCap). Yields the final bitvector struct;
-    * LCS = size(rw) − popcount(hi) − popcount(lo). */
-  private[graft] val lcsFoldSql: String = {
-    val masks = sparkMasksSql
-    // V starts all-ones over m bits. Each step: U = V & M; S = V + U
-    // with the lo→hi carry ((lo + ulo) >> 62 — both operands < 2^62, so
-    // the sum stays positive and the shift is the exact carry bit);
-    // OR with V & ~M; re-mask each limb to its live bits.
-    s"""aggregate($masks,
-       |  named_struct(
-       |    'hi', shiftleft(1L, greatest(size(rw) - 62, 0)) - 1L,
-       |    'lo', shiftleft(1L, least(size(rw), 62)) - 1L),
-       |  (v, mk) -> named_struct(
-       |    'hi', ((v.hi + (v.hi & mk.hi)
-       |            + shiftright(v.lo + (v.lo & mk.lo), 62))
-       |           | (v.hi & ~mk.hi))
-       |          & (shiftleft(1L, greatest(size(rw) - 62, 0)) - 1L),
-       |    'lo', (((v.lo + (v.lo & mk.lo)) & (shiftleft(1L, 62) - 1L))
-       |           | (v.lo & ~mk.lo))
-       |          & (shiftleft(1L, least(size(rw), 62)) - 1L)))""".stripMargin
-  }
-
   // ---- x156 WER: bit-parallel Myers edit distance, shared generator --
 
-  /** Dialect hooks — Spark SQL and DuckDB spell shifts, xor and BIGINT
-    * literals differently; the Myers step itself is generated ONCE by
-    * [[myersStep]], so the two engines cannot drift. */
+  /** Dialect hooks for the two-limb Myers step (shifts, xor and BIGINT
+    * literals); only the DuckDB rendering has a caller today. */
   private final case class Dia(
       shl: (String, String) => String, shr: (String, String) => String,
       xor: (String, String) => String, lng: Long => String)
-  private val SparkDia = Dia(
-    (x, n) => s"shiftleft($x, $n)", (x, n) => s"shiftright($x, $n)",
-    (a, b) => s"($a ^ $b)", v => s"${v}L")
-  // (The two-limb DuckDB dialect instance lived here until round 10:
-  // once the catalog oracle moved to the k-limb arrWerFoldDuckSql, the
-  // retained two-limb DuckDB fold had no caller and no gate executing
-  // it — dead spelling, deleted per the round-9 ADVICE. The Spark-side
-  // two-limb fold below stays: the __2limb AbVariants cost controls
-  // still run it, and Ext47Spec still pins it against the classic DP.)
-
   private final case class BV(hi: String, lo: String)
 
   /** One Myers (1999) edit-distance step over two 62-bit limbs: state v
-    * carries (Pv, Mv, score); `mk` is the candidate token's match mask.
-    * Limb discipline identical to the x154 fold: live-bit masks `bmh` /
-    * `bml` and the reference length `m` are PAIR COLUMNS referenced from
-    * inside the lambda (keeps the generated text bounded); the add's
-    * lo→hi carry is `(lo + lo') >> 62`, the shift's carry is bit 61.
-    * Validated 400/400 against the classic DP at build time (both
-    * limbs); Ext47Spec re-pins with a third pure-Scala spelling. */
+    * carries (Pv, Mv, score); `eqHi`/`eqLo` are the candidate token's
+    * match mask. Live-bit masks `bmh` / `bml` and the reference length
+    * `m` are PAIR COLUMNS referenced from inside the lambda (keeps the
+    * generated text bounded); the add's lo→hi carry is
+    * `(lo + lo') >> 62`, the shift's carry is bit 61. Each shared
+    * intermediate (eq, the carry add, Xh, Xv, Ph, Mh and the two
+    * shifts) is substituted inline at every use site: in DuckDB the
+    * duplicated scalar ops measured CHEAPER than [hi,lo]-list-payload
+    * lets (see the werFold2DuckOver note). */
   private def myersStep(d: Dia, eqHi: String, eqLo: String,
       st: String => String,
-      pack: (String, String, String, String, String) => String): String =
-    myersStepLet(d, eqHi, eqLo, st, pack, (_, bv, k) => k(bv))
-
-  /** The Myers step algebra, ONCE, with a pluggable let-binder for the
-    * shared intermediates (eq, the carry add, Xh, Xv, Ph, Mh and the
-    * two shifts). Both current callers pass the inline binder
-    * (substitute each intermediate's text at every use site): Spark
-    * codegen CSEs the tree, and in DuckDB the duplicated scalar ops
-    * measured CHEAPER than [hi,lo]-list-payload lets (see the
-    * werFold2DuckOver note). The hook is kept so a binder experiment
-    * stays a one-line change instead of a second step spelling. */
-  private def myersStepLet(d: Dia, eqHi: String, eqLo: String,
-      st: String => String,
-      pack: (String, String, String, String, String) => String,
-      let2: (String, BV, BV => String) => String): String = {
+      pack: (String, String, String, String, String) => String): String = {
     def and(x: BV, y: BV) = BV(s"(${x.hi} & ${y.hi})", s"(${x.lo} & ${y.lo})")
     def or(x: BV, y: BV) = BV(s"(${x.hi} | ${y.hi})", s"(${x.lo} | ${y.lo})")
     def xr(x: BV, y: BV) = BV(d.xor(x.hi, y.hi), d.xor(x.lo, y.lo))
@@ -187,31 +121,18 @@ object Ext47 {
       s"(CASE WHEN m <= 62 THEN (${d.shr(x.lo, "CAST(greatest(m - 1, 0) AS INT)")} & ${d.lng(1)})" +
         s" ELSE (${d.shr(x.hi, "CAST(m - 63 AS INT)")} & ${d.lng(1)}) END)"
     val pv = BV(st("pvh"), st("pvl")); val mv = BV(st("mvh"), st("mvl"))
-    let2("leq", BV(eqHi, eqLo), eq =>
-      let2("lad", add(and(eq, pv), pv), ad =>
-        let2("lxh", or(xr(ad, pv), eq), xh =>
-          let2("lxv", or(eq, mv), xv =>
-            let2("lph", or(mv, not(or(xh, pv))), ph =>
-              let2("lmh", and(pv, xh), mh =>
-                let2("lps", shl1(ph, d.lng(1)), phs =>
-                  let2("lms", shl1(mh, d.lng(0)), mhs => {
-                    val pv2 = or(mhs, not(or(xv, phs)))
-                    val mv2 = and(phs, xv)
-                    val sc2 =
-                      s"((${st("sc")} + ${top(ph)}) - ${top(mh)})"
-                    pack(pv2.hi, pv2.lo, mv2.hi, mv2.lo, sc2)
-                  }))))))))
-  }
-
-  /** The full Spark-side Myers fold over pair columns cw/rw/m/bmh/bml. */
-  private val werFoldSparkSql: String = {
-    val masks = sparkMasksSql
-    val step = myersStep(SparkDia, "mk.hi", "mk.lo", f => s"v.$f",
-      (a, b, c, dd, e) =>
-        s"named_struct('pvh', $a, 'pvl', $b, 'mvh', $c, 'mvl', $dd, 'sc', $e)")
-    s"""aggregate($masks,
-       |  named_struct('pvh', bmh, 'pvl', bml, 'mvh', 0L, 'mvl', 0L, 'sc', m),
-       |  (v, mk) -> $step)""".stripMargin
+    val eq = BV(eqHi, eqLo)
+    val ad = add(and(eq, pv), pv)
+    val xh = or(xr(ad, pv), eq)
+    val xv = or(eq, mv)
+    val ph = or(mv, not(or(xh, pv)))
+    val mh = and(pv, xh)
+    val phs = shl1(ph, d.lng(1))
+    val mhs = shl1(mh, d.lng(0))
+    val pv2 = or(mhs, not(or(xv, phs)))
+    val mv2 = and(phs, xv)
+    val sc2 = s"((${st("sc")} + ${top(ph)}) - ${top(mh)})"
+    pack(pv2.hi, pv2.lo, mv2.hi, mv2.lo, sc2)
   }
 
   // (The two-limb DuckDB Myers fold — werFoldDuckSql — was deleted in
@@ -224,9 +145,8 @@ object Ext47 {
   /** Round-12 resurrection WITH a live caller: x170's oracle scores
     * its unnested candidates through this fold for nl <= 2 pairs (the
     * DuckDB CASE dispatch in Ext50 — lazy per selection vector, so the
-    * k-limb branch pays nothing when no pair needs it). Same
-    * [[myersStep]] generator as the Spark two-limb fold, so the step
-    * math cannot drift; state rides LIST(BIGINT)
+    * k-limb branch pays nothing when no pair needs it). The step is
+    * generated by [[myersStep]]; state rides LIST(BIGINT)
     * [pvh, pvl, mvh, mvl, sc] (the struct-accumulator quirk), and the
     * mask stream is the SAME per-token nl-limb arrays the k-limb fold
     * reads — limb 1 = lo, limb 2 = hi (absent at nl = 1 ⇒ coalesced 0).
@@ -256,8 +176,8 @@ object Ext47 {
     // a list allocation per binding per step costs far more than the
     // duplicated vectorized scalar ops it saves. The textual blowup is
     // benign here because every duplicated node is a scalar BIGINT op.
-    val step = myersStepLet(DuckDia, eqHi, eqLo, st,
-      (a, b, c, dd, e) => s"[$a, $b, $c, $dd, $e]", (_, bv, k) => k(bv))
+    val step = myersStep(DuckDia, eqHi, eqLo, st,
+      (a, b, c, dd, e) => s"[$a, $b, $c, $dd, $e]")
     s"""list_reduce(list_prepend(
        |  [bmh, bml, CAST(0 AS BIGINT), CAST(0 AS BIGINT), m],
        |  $items),
@@ -269,17 +189,18 @@ object Ext47 {
 
   // ---- round 9: k-limb array state (the LcsCap lift) ----------------------
   //
-  // The two-limb {hi, lo} structs above cap both DP metrics at 124
-  // tokens per side. The k-limb generalization stores the bitvectors as
+  // The round-8 two-limb {hi, lo} state capped both DP metrics at 124
+  // tokens per side (only x170's DuckDB dispatch still renders it, via
+  // myersStep above). The k-limb generalization stores the bitvectors as
   // ARRAY<BIGINT> with a PER-PAIR limb count nl = ceil(m/62): short
   // pairs keep paying one limb, long pairs get exact answers up to
   // LcsCap. The only genuinely sequential piece is the DP addition's
   // cross-limb carry, spelled as an inner fold over limb indices
   // (state = partial limbs + carry; each limb sum ≤ 2·(2^62−1)+1 =
   // Long.MaxValue, so the 62-bit shift is the exact carry). Everything
-  // else is limb-wise. As with the two-limb forms, the step math is
-  // generated ONCE and rendered per dialect (validated 40/40 against
-  // classic DP per engine before landing; Ext47Spec re-pins both).
+  // else is limb-wise. The step math is generated ONCE and rendered per
+  // dialect (validated 40/40 against classic DP per engine before
+  // landing; Ext47Spec re-pins both).
   // DuckDB quirks carried over from x156: LIST(BIGINT) state (its
   // list_reduce miscomputes STRUCT accumulators), list_prepend'ed init;
   // let-bindings are spelled list_transform([expr], x -> body)[1] —
@@ -485,7 +406,7 @@ object Ext47 {
     // all floored ppm BIGINT. The F1 spelling 2Σlcs/(Σ|c|+Σ|r|) IS the
     // harmonic mean of micro P and R computed exactly — composing the
     // two already-floored ppm values would double-floor.
-    "x154_rouge_l" -> ((s, d) => rougeL(s, d, kLimb = true)),
+    "x154_rouge_l" -> ((s, d) => rougeL(s, d)),
 
     // X155 chrF (Popović 2015): character n-gram F-score, n = 1..6,
     // over whitespace-stripped text (chrF's published convention),
@@ -497,8 +418,7 @@ object Ext47 {
     // clip. The "obvious" improvement — union both sides with a flag
     // into ONE groupBy, clip = least(c_c, c_r), no join — MEASURED 2×
     // SLOWER same-boot (9.76 vs 5.26 s min-of-3 at sf0.1,
-    // BENCH_AB_r08_x155.json; kept as AbVariants
-    // "x155_chrf__singlepass"): per-(pair, n, gram) multiplicity is ~1,
+    // BENCH_AB_r08_x155.json): per-(pair, n, gram) multiplicity is ~1,
     // so map-side combine reduces nothing and the union just pushes the
     // SAME 2×17M rows through one fatter exchange + hash table instead
     // of two lighter ones, while the SMJ clip it was meant to save is
@@ -507,8 +427,7 @@ object Ext47 {
     // nativeGrams ADOPTED round 10: 0.76 vs 4.82 s min-of-5 same-boot
     // at sf0.1 (BENCH_AB_r10_chrgram.json) — after two exchange-shrink
     // negatives, the time was the interpreted gram pyramid itself.
-    "x155_chrf" -> ((s, d) => chrF(s, d, joinClip = true,
-      nativeGrams = true)),
+    "x155_chrf" -> ((s, d) => chrF(s, d, nativeGrams = true)),
 
     // X156 WER — word error rate (the ASR/generation eval): per pair,
     // Levenshtein distance between candidate and reference token
@@ -524,25 +443,16 @@ object Ext47 {
     // degrades to dist = |cand|.
     // micro wer_ppm = Σdist·1e6 div Σ|ref|; macro = mean per-pair ppm
     // (can exceed 1e6 when the candidate is longer — WER's convention).
-    "x156_wer" -> ((s, d) => wer(s, d, kLimb = true)),
+    "x156_wer" -> ((s, d) => wer(s, d)),
   )
 
-  /** x154 body; `kLimb = false` is the round-8 two-limb 124-token form,
-    * retained as the AbVariants cost control. */
-  private[graft] def rougeL(s: SparkSession, d: String,
-      kLimb: Boolean): DataFrame = {
-    val paired =
-      if (kLimb)
-        pairedTokens(s, d, LcsCap)
-          .withColumn("st", expr(arrLcsFoldSparkSql))
-          .withColumn("lcs", expr(
-            """m - aggregate(transform(st, pb -> CAST(bit_count(pb) AS BIGINT)),
-              |  0L, (pa, pc) -> pa + pc)""".stripMargin))
-      else
-        pairedTokens(s, d, LcsCap2Limb)
-          .withColumn("st", expr(lcsFoldSql))
-          .withColumn("lcs", (size(col("rw")) - expr("bit_count(st.hi)")
-            - expr("bit_count(st.lo)")).cast("long"))
+  /** x154 body. */
+  private def rougeL(s: SparkSession, d: String): DataFrame = {
+    val paired = pairedTokens(s, d)
+      .withColumn("st", expr(arrLcsFoldSparkSql))
+      .withColumn("lcs", expr(
+        """m - aggregate(transform(st, pb -> CAST(bit_count(pb) AS BIGINT)),
+          |  0L, (pa, pc) -> pa + pc)""".stripMargin))
     val per = paired.select(col("source"),
       size(col("cw")).cast("long").as("nc"), col("m"),
       (col("ccap") || col("rcap")).as("cap"), col("lcs"))
@@ -565,20 +475,10 @@ object Ext47 {
       .orderBy(col("source"))
   }
 
-  /** x156 body; `kLimb = false` is the round-8 two-limb form. */
-  private[graft] def wer(s: SparkSession, d: String,
-      kLimb: Boolean): DataFrame = {
-    val paired =
-      if (kLimb)
-        pairedTokens(s, d, LcsCap)
-          .withColumn("stv", expr(arrWerFoldSparkSql))
-      else
-        pairedTokens(s, d, LcsCap2Limb)
-          .withColumn("bml",
-            expr("shiftleft(1L, CAST(least(m, 62) AS INT)) - 1L"))
-          .withColumn("bmh",
-            expr("shiftleft(1L, CAST(greatest(m - 62, 0) AS INT)) - 1L"))
-          .withColumn("stv", expr(werFoldSparkSql))
+  /** x156 body. */
+  private def wer(s: SparkSession, d: String): DataFrame = {
+    val paired = pairedTokens(s, d)
+      .withColumn("stv", expr(arrWerFoldSparkSql))
     val per = paired.select(col("source"),
       size(col("cw")).cast("long").as("nc"), col("m"),
       (col("ccap") || col("rcap")).as("cap"),
@@ -600,41 +500,16 @@ object Ext47 {
       .orderBy(col("source"))
   }
 
-  /** x155 body; `joinClip = false` is the single-pass side-flag form —
-    * the retained NEGATIVE result (see the catalog entry's comment and
-    * BENCH_AB_r08_x155.json). `packKeys = true` shuffles grams as
-    * 48-bit BIGINT keys (8 bits × ≤6 chars — exact and reversible for
-    * ASCII text; the round-9 shuffle-width probe, valid on this corpus
-    * whose max codepoint is 121 — a catalog entry could NOT assume
-    * that, which is one reason this stays a variant). Outputs are
-    * identical either way (the total_cand > 0 filter reproduces the
-    * join form's cand-side row domain; Ext47Spec pins the packed
-    * equality). */
+  /** x155 body. `nativeGrams = false` is the interpreted HOF gram
+    * pyramid, the reference Ext47Spec compares the catalog's native
+    * path against. Two per-side (pair, n, gram) count aggregations,
+    * equi-join clip (the catalog entry's comment records why the
+    * single-pass union form lost, BENCH_AB_r08_x155.json; the packed
+    * 48-bit-key probe lost 13.36 vs 4.59 s, BENCH_AB_r09_x155.json). */
   private[graft] def chrF(s: SparkSession, d: String,
-      joinClip: Boolean, packKeys: Boolean = false,
-      nativeGrams: Boolean = false): DataFrame = {
-    require(!(packKeys && nativeGrams),
-      "packKeys and nativeGrams are mutually exclusive gram paths")
-    require(!nativeGrams || joinClip,
-      "nativeGrams is wired into the catalog (joinClip) shape only")
-    // Round-10 guard (ADVICE r9): the packed 8-bit-per-char keys alias
-    // DISTINCT grams whenever any codepoint exceeds 255, so off an
-    // ASCII corpus the variant would emit silently-wrong A/B outputs.
-    // Fail LOUDLY instead: one exists() pass per doc (negligible next
-    // to the packing fold it guards; the unpacked catalog path is
-    // untouched). Ext47Spec pins both the ASCII equality and this
-    // loud path.
-    val tCol =
-      if (!packKeys) expr("replace(text, ' ', '')")
-      else expr(
-        """CASE WHEN exists(split(replace(text, ' ', ''), ''),
-          |            c -> ascii(c) > 255)
-          |  THEN raise_error(concat('x155_chrf__packedkeys requires an',
-          |    ' ASCII corpus: 8-bit-per-char key packing aliases grams',
-          |    ' past codepoint 255 (doc_id ', CAST(doc_id AS STRING), ')'))
-          |  ELSE replace(text, ' ', '') END""".stripMargin)
+      nativeGrams: Boolean): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("source"),
-      tCol.as("t"))
+      expr("replace(text, ' ', '')").as("t"))
     val cand = docs.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id").as("pair_id"), col("source"), col("t").as("ct"))
     val ref = docs.filter(col("doc_id") % 2 === 0)
@@ -642,68 +517,42 @@ object Ext47 {
     val pairs = cand.join(ref, Seq("pair_id"))
     // x152's sequence gotcha: sequence(1, stop) DESCENDS when stop < 1,
     // so generate over a floor of 1 and slice back to the true count.
-    def grams(tc: String): Column = {
-      val g =
-        if (packKeys)
-          s"""aggregate(sequence(1, n), 0L,
-             |  (ka, kj) -> ka * 256L + ascii(substring($tc, i + kj - 1, 1)))"""
-            .stripMargin
-        else s"substring($tc, i, n)"
+    def grams(tc: String): Column =
       explode(expr(
         s"""flatten(transform(sequence(1, 6), n ->
            |  slice(
            |    transform(sequence(1, greatest(length($tc) - n + 1, 1)), i ->
-           |      named_struct('n', n, 'g', $g)),
+           |      named_struct('n', n, 'g', substring($tc, i, n))),
            |    1, greatest(length($tc) - n + 1, 0))))""".stripMargin))
+    // A gram's order IS its character length, so the native path
+    // carries the (n, g) key as a flat string array — no structs,
+    // no interpreted HOF pyramid, no per-gram substring re-walk
+    // (GraftCharGrams; the graft_shingles3 precedent, VERDICT r9 #6).
+    def gramCounts(tcol: String, cname: String): DataFrame = {
+      val keyed =
+        if (nativeGrams)
+          pairs.select(col("pair_id"), col("source"),
+              explode(TextOps.charGrams(col(tcol), 6)).as("g"))
+            .select(col("pair_id"), col("source"),
+              length(col("g")).cast("long").as("n"), col("g"))
+        else
+          pairs.select(col("pair_id"), col("source"), grams(tcol).as("x"))
+            .select(col("pair_id"), col("source"),
+              col("x.n").cast("long").as("n"), col("x.g").as("g"))
+      keyed.groupBy(col("pair_id"), col("source"), col("n"), col("g"))
+        .agg(count(lit(1)).as(cname))
     }
-    val fin =
-      if (!joinClip) {
-        val per = pairs
-          .select(col("pair_id"), col("source"), lit(1L).as("is_c"),
-            grams("ct").as("x"))
-          .unionByName(pairs
-            .select(col("pair_id"), col("source"), lit(0L).as("is_c"),
-              grams("rt").as("x")))
-          .groupBy(col("pair_id"), col("source"),
-            col("x.n").cast("long").as("n"), col("x.g").as("g"))
-          .agg(sum(col("is_c")).as("c_c"),
-            sum(lit(1L) - col("is_c")).as("c_r"))
-        per.groupBy(col("source"), col("n"))
-          .agg(sum(least(col("c_c"), col("c_r"))).as("clipped"),
-            sum(col("c_c")).as("total_cand"),
-            sum(col("c_r")).as("total_ref"))
-          .filter(col("total_cand") > 0L)
-      } else {
-        // A gram's order IS its character length, so the native path
-        // carries the (n, g) key as a flat string array — no structs,
-        // no interpreted HOF pyramid, no per-gram substring re-walk
-        // (GraftCharGrams; the graft_shingles3 precedent, VERDICT r9 #6).
-        def gramCounts(tcol: String, cname: String): DataFrame = {
-          val keyed =
-            if (nativeGrams)
-              pairs.select(col("pair_id"), col("source"),
-                  explode(TextOps.charGrams(col(tcol), 6)).as("g"))
-                .select(col("pair_id"), col("source"),
-                  length(col("g")).cast("long").as("n"), col("g"))
-            else
-              pairs.select(col("pair_id"), col("source"), grams(tcol).as("x"))
-                .select(col("pair_id"), col("source"),
-                  col("x.n").cast("long").as("n"), col("x.g").as("g"))
-          keyed.groupBy(col("pair_id"), col("source"), col("n"), col("g"))
-            .agg(count(lit(1)).as(cname))
-        }
-        val cc = gramCounts("ct", "c_c")
-        val rc = gramCounts("rt", "c_r")
-        val cl = cc.join(rc.drop("source"), Seq("pair_id", "n", "g"))
-          .groupBy(col("source"), col("n"))
-          .agg(sum(least(col("c_c"), col("c_r"))).as("clipped"))
-        val tc = cc.groupBy(col("source"), col("n"))
-          .agg(sum(col("c_c")).as("total_cand"))
-        val tr = rc.groupBy(col("source"), col("n"))
-          .agg(sum(col("c_r")).as("total_ref"))
-        tc.join(cl, Seq("source", "n"), "left")
-          .join(tr, Seq("source", "n"), "left")
-      }
+    val cc = gramCounts("ct", "c_c")
+    val rc = gramCounts("rt", "c_r")
+    val cl = cc.join(rc.drop("source"), Seq("pair_id", "n", "g"))
+      .groupBy(col("source"), col("n"))
+      .agg(sum(least(col("c_c"), col("c_r"))).as("clipped"))
+    val tc = cc.groupBy(col("source"), col("n"))
+      .agg(sum(col("c_c")).as("total_cand"))
+    val tr = rc.groupBy(col("source"), col("n"))
+      .agg(sum(col("c_r")).as("total_ref"))
+    val fin = tc.join(cl, Seq("source", "n"), "left")
+      .join(tr, Seq("source", "n"), "left")
     fin.select(col("source"), col("n"),
         coalesce(col("clipped"), lit(0L)).as("clipped"),
         col("total_cand"),

@@ -137,18 +137,16 @@ object Ext49 {
     // green-lights (x150 precedent): 1.36 vs 1.99 s min-of-5 same-boot
     // (BENCH_AB_r09_x160.json). 24 B/row, MEMORY_AND_DISK, released by
     // GraftCaches — the right 100 TB call for a 7-consumer frame.
-    "x160_kendall_tau_b" -> ((s, d) => kendallTauB(s, d, persist = true)),
+    "x160_kendall_tau_b" -> ((s, d) => kendallTauB(s, d)),
   )
 
-  /** x160 body; `persist = false` is the rescan form, retained as the
-    * AbVariants control (the persist WON same-boot: 1.36 vs 1.99 s
-    * min-of-5, BENCH_AB_r09_x160.json — all seven consumers share the
-    * SAME narrow projection, the x150 green-light case). */
-  private[graft] def kendallTauB(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
+  /** x160 body (the signals persist WON same-boot over the rescan form:
+    * 1.36 vs 1.99 s min-of-5, BENCH_AB_r09_x160.json — all seven
+    * consumers share the SAME narrow projection, the x150 green-light
+    * case). */
+  private def kendallTauB(s: SparkSession, d: String): DataFrame = {
       import graft.GraftCaches.TrackedPersist
-      val sc0 = Ext48.signals(s, d)
-      val sc = if (persist) sc0.persistTracked() else sc0
+      val sc = Ext48.signals(s, d).persistTracked()
       val n = sc.count()
       requireTauBExact(n)
       def tieTerm(cols: Seq[String]): Long =
@@ -184,8 +182,8 @@ object Ext49 {
           "denom_isqrt", "tau_b_ppm")
   }
 
-  /** x161 chrF++ body, shared by the catalog entry and the __hofgrams
-    * AbVariant (the one-helper-not-copies rule). nativeGrams (ADOPTED
+  /** x161 chrF++ body. `nativeGrams = false` is the interpreted HOF
+    * pyramid, the reference Ext49ChrfSpec compares against. nativeGrams (ADOPTED
     * round 10, BENCH_AB_r10_chrgram.json's 6.3× x155 win applied to the
     * same pyramid here) swaps the interpreted named_struct HOF for ONE
     * codegen'd GraftCharGrams pass plus the (cheap, ~3 items/doc·order)
@@ -354,9 +352,9 @@ object Ext49 {
     // Round 15: histogram persist dropped (BENCH_AB_r15_r11persists.json,
     // 0.33 vs 0.57 s min same-boot) — the histogram is exchange-topped,
     // so AQE stage reuse already dedupes its consumers; the r9 "re-scans
-    // the corpus" rationale predated that insight. x164/x165 ride the
-    // same splitHistogram default.
-    "x163_wasserstein_drift" -> ((s, d) => wasserstein(s, d, persist = false)),
+    // the corpus" rationale predated that insight. x164/x165 share the
+    // same persist-free splitHistogram.
+    "x163_wasserstein_drift" -> ((s, d) => wasserstein(s, d)),
 
     // X164 MANN-WHITNEY U / RANK-BISERIAL between the even/odd
     // token-count distributions — the nonparametric "did the signal
@@ -417,12 +415,11 @@ object Ext49 {
       // Round 15: c2 persist dropped — the x85/x116 measured twin (both
       // consumers share the (l, r) groupBy exchange; AQE stage reuse
       // dedupes persist-free). A/B in BENCH_AB_r15_c2persists.json.
-      minKProb(s, d, persistC2 = false)),
+      minKProb(s, d)),
   )
 
-  /** x167 body with the round-15 c2-persist knob (see the catalog entry). */
-  private[graft] def minKProb(s: SparkSession, d: String,
-      persistC2: Boolean): DataFrame = {
+  /** x167 body (see the catalog entry). */
+  private def minKProb(s: SparkSession, d: String): DataFrame = {
       import graft.GraftCaches.TrackedPersist
       val bg = documents(s, d)
         .select(col("doc_id"), graft.ext.TextOps.words(col("text")).as("w"))
@@ -432,8 +429,7 @@ object Ext49 {
             " (x, i) -> struct(x AS l, w[i+1] AS r))")).as("p"))
         .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))
         .persistTracked()
-      val c2base = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
-      val c2 = if (persistC2) c2base.persistTracked() else c2base
+      val c2 = bg.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c2"))
       val c1 = c2.groupBy(col("l")).agg(sum(col("c2")).as("c1"))
       val score = c2.join(c1, Seq("l"))
         .select(col("l"), col("r"), expr("c2 * 1000000 div c1").as("ppm"))
@@ -515,39 +511,30 @@ object Ext49 {
     * x121/x120 precedent). One helper, not three copies — the f2ae8a2
     * shared-kernel rule.
     *
-    * Round 15: the persist default flipped to FALSE — the histogram's
-    * top is its own groupBy exchange, so AQE stage reuse dedupes every
-    * consumer's heavy work (corpus scan + partial agg + shuffle) and
-    * only the final aggregation re-runs per consumer; the round-9
-    * "persist or the corpus re-scans per consumer" rationale predated
-    * that insight and the A/B now reverses it (0.33 vs 0.57 s min on
-    * x163, BENCH_AB_r15_r11persists.json). `persist = true` is the
-    * retained AbVariants control. */
-  private[graft] def splitHistogram(s: SparkSession, d: String,
-      persist: Boolean = false): (DataFrame, DataFrame) = {
-    import graft.GraftCaches.TrackedPersist
-    val h0 = documents(s, d)
+    * Round 15: the persist was dropped — the histogram's top is its own
+    * groupBy exchange, so AQE stage reuse dedupes every consumer's heavy
+    * work (corpus scan + partial agg + shuffle) and only the final
+    * aggregation re-runs per consumer; the round-9 "persist or the
+    * corpus re-scans per consumer" rationale predated that insight and
+    * the A/B reverses it (0.33 vs 0.57 s min on x163,
+    * BENCH_AB_r15_r11persists.json). */
+  private def splitHistogram(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val h = documents(s, d)
       .select(col("doc_id"),
         size(expr("split(text, ' ')")).cast("long").as("v"))
       .groupBy(col("v")).agg(
         sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).as("ca"),
         sum(when(col("doc_id") % 2 === 1, 1L).otherwise(0L)).as("cb"))
-    val h = if (persist) h0.persistTracked() else h0
     val nf = h.agg(
       coalesce(sum(col("ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("cb")), lit(0L)).as("n_b"))
     (h, nf)
   }
 
-  /** x163 body — ONE spelling for the catalog entry (persist = true)
-    * and the AbVariants multiscan control (persist = false: each nf
-    * reference re-runs the histogram, i.e. re-scans the corpus;
-    * value-identical). Factored in round 10 (ADVICE r9: the control
-    * duplicated this body line-for-line and could silently drift —
-    * the kendallTauB/chrF one-helper-not-copies rule). */
-  private[graft] def wasserstein(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
-    val (h, nf) = splitHistogram(s, d, persist)
+  /** x163 body. */
+  private def wasserstein(s: SparkSession, d: String): DataFrame = {
+    val (h, nf) = splitHistogram(s, d)
     val wcum = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = h.select(col("v"),

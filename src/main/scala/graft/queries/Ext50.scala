@@ -228,7 +228,7 @@ object Ext50 {
 
   private[graft] def ter(s: SparkSession, dir: String): DataFrame = {
     val t = SparkT
-    var df = pairedTokens(s, dir, LcsCap)
+    var df = pairedTokens(s, dir)
       .withColumn("n", size(col("cw")).cast("long"))
       .withColumn("rgs", expr(rgsSql(t)))
       .withColumn("mv", expr(arrMasksSparkSql))

@@ -68,7 +68,7 @@ object Ext52 {
     // consumes freq across 3+ separate jobs (range sampling, count job,
     // consumer), so the final-agg re-runs add up where a single lazy
     // query's stage reuse would not.
-    "x172_zipf_buckets" -> ((s, d) => zipfBuckets(s, d, persistFreq = true)),
+    "x172_zipf_buckets" -> ((s, d) => zipfBuckets(s, d)),
 
     // X173 TERM BURSTINESS (Fano factor over per-doc counts, zeros
     // included): top-15 clumpiest tokens by exact VMR ppm. n_docs is
@@ -92,14 +92,13 @@ object Ext52 {
         .limit(15)
     }))
 
-  /** x172 body with the round-15 freq-persist knob. */
-  private[graft] def zipfBuckets(s: SparkSession, d: String,
-      persistFreq: Boolean): DataFrame = {
-      val f0 = documents(s, d)
+  /** x172 body. */
+  private def zipfBuckets(s: SparkSession, d: String): DataFrame = {
+      val f = documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      val f = if (persistFreq) f0.persistTracked() else f0
+        .persistTracked()
       val nVocab = f.agg(count(lit(1)).as("n_vocab"))
       val ranked = GlobalSeq.withSeq(
           f, Seq(col("freq").desc, col("w")), "z")

@@ -76,13 +76,10 @@ object Ext53 {
         .limit(20)
     }),
 
-    "x174_jaro_winkler" -> ((s, d) => jaroQuery(s, d, nativeMk = true)))
+    "x174_jaro_winkler" -> ((s, d) => jaroQuery(s, d)))
 
-  /** The full x174 body (pair join + scorer + decile rollup) — one
-    * helper shared by the catalog entry and the `__hoffold` AbVariant
-    * (the no-drift rule). */
-  private[graft] def jaroQuery(s: SparkSession, d: String,
-      nativeMk: Boolean): DataFrame = {
+  /** The full x174 body (pair join + scorer + decile rollup). */
+  private def jaroQuery(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val cand = docs.filter(col("doc_id") % 2 === 1)
       .select((col("doc_id") - 1L).as("pair_id"),
@@ -91,7 +88,7 @@ object Ext53 {
       .select(col("doc_id").as("pair_id"),
         substring(col("text"), 1, 40).as("b"))
     val pairs = cand.join(ref, Seq("pair_id"))
-    jaroWinkler(pairs, nativeMk)
+    jaroWinkler(pairs)
       .groupBy(expr("jw_ppm div 100000L").as("jw_decile"))
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("jw_ppm")).as("sum_jw_ppm"),
@@ -107,26 +104,23 @@ object Ext53 {
     * the HOF spelling; the domain guard raises on both paths). Shared
     * by the catalog entry and the spec's planted-classics harness.
     *
-    * `nativeMk = true` (the catalog path) computes (m, k) with the
-    * native graft_jaro_mk codegen kernel — the interpreted HOF fold
-    * measured 3.07 s at sf0.1 (5th-slowest catalog query), the
-    * chrF-family interpreted-generator lesson; the fold spelling stays
-    * callable as the `x174_jaro_winkler__hoffold` AbVariant and the
-    * parity spec pins value-identity. */
-  private[graft] def jaroWinkler(pairs: DataFrame,
-      nativeMk: Boolean = true): DataFrame =
-    if (nativeMk)
-      jwPrep(pairs)
-        .withColumn("mk", graft.ext.Similarity.jaroMk(col("a"), col("b")))
-        // the domain guard rides the m column (load-bearing on both
-        // paths — a free-standing guard column would be pruned away)
-        .withColumn("m", expr(
-          s"""CASE WHEN la > 62 OR lb > 62 THEN $JwGuardRaise
-             |  ELSE shiftright(mk, 32) END""".stripMargin))
-        .withColumn("k", expr("mk & 4294967295L"))
-        .drop("mk")
-        .transform(jwFinish)
-    else jaroWinklerHof(pairs)
+    * (m, k) come from the native graft_jaro_mk codegen kernel — the
+    * interpreted HOF fold measured 3.07 s at sf0.1 (5th-slowest catalog
+    * query, BENCH_AB_r10_jaromk.json), the chrF-family
+    * interpreted-generator lesson. The fold spelling,
+    * [[jaroWinklerHof]], is the reference Ext53Spec pins the kernel
+    * against. */
+  private[graft] def jaroWinkler(pairs: DataFrame): DataFrame =
+    jwPrep(pairs)
+      .withColumn("mk", graft.ext.Similarity.jaroMk(col("a"), col("b")))
+      // the domain guard rides the m column (load-bearing on both
+      // paths — a free-standing guard column would be pruned away)
+      .withColumn("m", expr(
+        s"""CASE WHEN la > 62 OR lb > 62 THEN $JwGuardRaise
+           |  ELSE shiftright(mk, 32) END""".stripMargin))
+      .withColumn("k", expr("mk & 4294967295L"))
+      .drop("mk")
+      .transform(jwFinish)
 
   /** The raise shared by both paths' domain guards (62-char limb). */
   private val JwGuardRaise: String =

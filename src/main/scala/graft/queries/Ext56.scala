@@ -41,13 +41,11 @@ import graft.tables.Tables._
   * pattern count (partial-aggregable; group domain is 2^K, never
   * rows); EM is O(R·2^K) on 16 rows. The block key is the scale
   * lever: exact token count suits this corpus; a real run blocks on
-  * x175's phonetic key or j11's prefix — the EM is block-agnostic,
-  * and since round 11 that is EVIDENCE, not a claim: [[fellegiSunter]]
-  * takes the blocking key as a parameter, and Ext56Spec runs the EM on
-  * the x175 Soundex key and checks the field marginals and the planted
-  * corruption rate come back blocking-invariant (it also pins the
-  * textbook degeneracy — the blocking field's own comparator goes
-  * uninformative, u_tok0 ≈ m_tok0 ≈ 1 inside phonetic blocks).
+  * x175's phonetic key or j11's prefix — the EM is block-agnostic.
+  * Round 11 measured that: the same EM over x175 Soundex blocks gave
+  * back the field marginals and the planted corruption rate, and the
+  * blocking field's own comparator went uninformative (u_tok0 ≈
+  * m_tok0 ≈ 1 inside phonetic blocks — never compare on the block key).
   */
 object Ext56 {
 
@@ -60,39 +58,21 @@ object Ext56 {
 
     "x178_fellegi_sunter" -> ((s, d) => fellegiSunter(s, d)))
 
-  /** The x178 body with the blocking key as the parameter — the scale
-    * lever the scaladoc names. `sdxBlock = false` is the catalog entry
-    * (exact token-count blocks); `sdxBlock = true` blocks on x175's
-    * phonetic key over the record's own first token ([[Ext53
-    * .soundexCol]]; non-[a-z]+ tokens fall back to a '#'-tagged
-    * identity block so the key is total). The EM itself never changes
-    * — Ext56Spec's cross-blocking test is the evidence behind the
-    * "block-agnostic" claim (VERDICT r10 #5). */
-  private[graft] def fellegiSunter(s: SparkSession, d: String,
-      sdxBlock: Boolean = false): DataFrame = {
-      val src0 = documents(s, d).select(col("doc_id"), col("lang"),
+  /** The x178 body: exact token-count blocks. */
+  private def fellegiSunter(s: SparkSession, d: String): DataFrame = {
+      val src = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"),
         expr("element_at(split(text, ' '), 1)").as("tok0"),
         expr("size(split(text, ' '))").cast("long").as("n"),
         col("n_chars"))
-      val b0 = src0.select(col("doc_id"),
+      val b = src.select(col("doc_id"),
         when(col("doc_id") % 7 === 0, lit("xx")).otherwise(col("lang"))
           .as("lang"),
         col("source"),
         when(col("doc_id") % 11 === 0, reverse(col("tok0")))
           .otherwise(col("tok0")).as("tok0"),
         col("n"), col("n_chars"))
-      def addBlk(df: DataFrame): DataFrame = df
-        .withColumn("w", col("tok0"))
-        .withColumn("blk", when(col("w").rlike("^[a-z]+$"),
-          Ext53.soundexCol).otherwise(concat(lit("#"), col("tok0"))))
-        .drop("w")
-      val (src, b) =
-        if (sdxBlock) (addBlk(src0), addBlk(b0)) else (src0, b0)
-      val cond =
-        if (sdxBlock) col("a.blk") === col("b.blk")
-        else col("a.n") === col("b.n")
-      val hist = src.as("a").join(b.as("b"), cond)
+      val hist = src.as("a").join(b.as("b"), col("a.n") === col("b.n"))
         .select((
           when(col("a.lang") === col("b.lang"), 8L).otherwise(0L) +
           when(col("a.source") === col("b.source"), 4L).otherwise(0L) +

@@ -105,26 +105,23 @@ object Ext59 {
     // O(P) offsets — never a single-task window) + one 1-row agg;
     // O(1) driver closure. 1e12·3·s² ≤ ~2e27 at sf0.1 —
     // HUGEINT/BigInt (documented).
-    "x183_wilcoxon_signed_rank" -> ((s, d) => wilcoxon(s, d,
-      persist = true)))
+    "x183_wilcoxon_signed_rank" -> ((s, d) => wilcoxon(s, d)))
 
-  /** x183 body — ONE spelling for the catalog entry (persist = true:
-    * nPairs is a separate action from the ranked agg, and without the
-    * persist the scan + pair equi-join ran twice per query — ADVICE
-    * r10) and the AbVariants multiscan control (persist = false;
-    * value-identical). The splitHistogram/wasserstein factoring rule. */
-  private[graft] def wilcoxon(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
+  /** x183 body. The pair frame is persisted: nPairs is a separate action
+    * from the ranked agg, and without the persist the scan + pair
+    * equi-join ran twice per query (ADVICE r10,
+    * BENCH_AB_r11_x183persist.json). */
+  private def wilcoxon(s: SparkSession, d: String): DataFrame = {
       import graft.GraftCaches.TrackedPersist
       val v = documents(s, d)
         .select(col("doc_id"),
           expr("size(split(text, ' '))").cast("long").as("v"))
-      val p0 = v.filter(col("doc_id") % 2 === 0)
+      val p = v.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("pair_id"), col("v").as("va"))
         .join(v.select((col("doc_id") - 1L).as("pair_id"),
           col("v").as("vb")), Seq("pair_id"))
         .select(col("pair_id"), (col("vb") - col("va")).as("diff"))
-      val p = if (persist) p0.persistTracked() else p0
+        .persistTracked()
       val nPairs = p.count()
       val ranked = GlobalSeq.withSeq(
           p.filter(col("diff") =!= 0L)

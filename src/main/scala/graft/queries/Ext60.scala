@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.TextOps
 import graft.tables.Tables._
-import graft.GraftCaches.TrackedPersist
 
 /** Round-11 batch 1: the k-sample RANK tests — the two members the
   * statistics catalog was missing next to its 2-sample rank tests
@@ -75,26 +74,20 @@ object Ext60 {
     // 1.12 s min same-boot) — hist and cum are exchange-topped, so AQE
     // stage reuse dedupes their consumers persist-free; the r11
     // "corpus scan re-runs per consumer" rationale predated that insight.
-    "x187_kruskal_wallis" -> ((s, d) => kruskalWallis(s, d,
-      persist = false)))
+    "x187_kruskal_wallis" -> ((s, d) => kruskalWallis(s, d)))
 
-  /** x187 body — ONE spelling for the catalog entry (persist = false
-    * since round 15) and the AbVariants persisted control
-    * (value-identical either way). */
-  private[graft] def kruskalWallis(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
+  /** x187 body. */
+  private def kruskalWallis(s: SparkSession, d: String): DataFrame = {
       val v = documents(s, d)
         .select(col("lang"),
           expr("size(split(text, ' '))").cast("long").as("v"))
-      val hist0 = v.groupBy(col("lang"), col("v"))
+      val hist = v.groupBy(col("lang"), col("v"))
         .agg(count(lit(1)).as("cnt"))
-      val hist = if (persist) hist0.persistTracked() else hist0
       val byV = hist.groupBy(col("v")).agg(sum(col("cnt")).as("tv"))
       val wLess = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      val cum0 = byV.select(col("v"), col("tv"),
+      val cum = byV.select(col("v"), col("tv"),
         coalesce(sum(col("tv")).over(wLess), lit(0L)).as("cl"))
-      val cum = if (persist) cum0.persistTracked() else cum0
       val tieT = BigInt(cum.agg(coalesce(sum(
           expr("cast(tv as decimal(38,0)) * tv * tv - tv")),
           expr("cast(0 as decimal(38,0))")).as("t"))

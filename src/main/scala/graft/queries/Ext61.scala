@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.TextOps
 import graft.tables.Tables._
-import graft.GraftCaches.TrackedPersist
 
 /** Round-11 batch 2: x189 METEOR-lite (Banerjee & Lavie 2005) — the
   * last famous MT metric the catalog was missing (BLEU x152, ROUGE-L
@@ -55,8 +54,9 @@ import graft.GraftCaches.TrackedPersist
   * window; the stage joins are (pair_id, token, occ) equi-joins
   * (inverted-index shaped, cost tracks matching tokens); the chunk
   * window is per-pair. Everything partial-aggregable to |sources|
-  * rows. The pair/token frames are persisted across their two
-  * consumers (stage-1 join + residual anti-join — the x64 rule).
+  * rows. The pair/token frames are not persisted: their two consumers
+  * (stage-1 join + residual anti-join) share each frame's exchange, so
+  * AQE stage reuse dedupes them (round 15, BENCH_AB_r15_r11persists.json).
   */
 object Ext61 {
 
@@ -83,18 +83,10 @@ object Ext61 {
     // Round 15: persists dropped (BENCH_AB_r15_r11persists.json, 0.42 vs
     // 0.55 s min same-boot) — the persisted frames' consumers share
     // their exchanges, AQE stage reuse dedupes persist-free.
-    "x189_meteor_lite" -> ((s, d) => meteorLite(s, d, persist = false)))
+    "x189_meteor_lite" -> ((s, d) => meteorLite(s, d)))
 
-  /** x189 body — ONE spelling for the catalog entry (persist = true:
-    * pairs feeds both explodes + the length rollup, ct/rt each feed
-    * the stage-1 join + their residual anti-join, m1 feeds both
-    * anti-joins + the union — without the persists the pair join and
-    * explodes re-run per consumer) and the AbVariants multiscan
-    * control (persist = false; value-identical). */
-  private[graft] def meteorLite(s: SparkSession, d: String,
-      persist: Boolean): DataFrame = {
-      def p(df: DataFrame): DataFrame = if (persist) df.persistTracked()
-        else df
+  /** x189 body. */
+  private def meteorLite(s: SparkSession, d: String): DataFrame = {
       val docs = documents(s, d)
         .select(col("doc_id"), col("source"),
           TextOps.words(col("text")).as("w"))
@@ -102,20 +94,20 @@ object Ext61 {
         .select(col("doc_id").as("pair_id"), col("source"), col("w"))
       val ref = docs.filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 1L).as("pair_id"), col("w").as("rw"))
-      val pairs = p(cand.join(ref, Seq("pair_id")))
+      val pairs = cand.join(ref, Seq("pair_id"))
 
       def occIdx(df: DataFrame, posCol: String, keyCol: String) =
         df.withColumn("occ", row_number().over(Window
           .partitionBy(col("pair_id"), col(keyCol))
           .orderBy(col(posCol))).cast("long"))
 
-      val ct = p(occIdx(pairs.select(col("pair_id"),
-          posexplode(col("w")).as(Seq("cpos", "tok"))), "cpos", "tok"))
-      val rt = p(occIdx(pairs.select(col("pair_id"),
-          posexplode(col("rw")).as(Seq("rpos", "tok"))), "rpos", "tok"))
+      val ct = occIdx(pairs.select(col("pair_id"),
+          posexplode(col("w")).as(Seq("cpos", "tok"))), "cpos", "tok")
+      val rt = occIdx(pairs.select(col("pair_id"),
+          posexplode(col("rw")).as(Seq("rpos", "tok"))), "rpos", "tok")
 
-      val m1 = p(ct.join(rt, Seq("pair_id", "tok", "occ"))
-        .select(col("pair_id"), col("cpos"), col("rpos")))
+      val m1 = ct.join(rt, Seq("pair_id", "tok", "occ"))
+        .select(col("pair_id"), col("cpos"), col("rpos"))
 
       def residual(tf: DataFrame, posCol: String) =
         occIdx(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.GraftCaches.TrackedPersist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -50,9 +49,8 @@ object Ext7 {
     // (Catalyst re-inserts the aggregation's own (doc_id, term) exchange
     // — see the sparseCosineTopK comment); the form trades a pre-explode
     // full-row exchange for a post-explode partial-agg one, it does not
-    // remove a shuffle. The repartitioning form stays callable
-    // (__repart … via the sparseCosineTopK knob) for sources that really
-    // do arrive in one unsplittable file.
+    // remove a shuffle. A source that really does arrive in one
+    // unsplittable file would want the repartition back.
     // Round 15: the weighted-index persist dropped — 2.24 vs 4.15 s min
     // same-boot (BENCH_AB_r15_x47w.json). All four w consumers share
     // tf's and dfq's exchanges via stage reuse, so persist-free costs
@@ -61,8 +59,7 @@ object Ext7 {
     // the corpus either way (the scan + explode + partial agg sit below
     // tf's shared exchange).
     "x47_sparse_cosine" -> ((s, d) =>
-      sparseCosineTopK(documents(s, d), dfLo = 2, dfHi = 4, k = 25,
-        repartitionByDoc = false, persistW = false)),
+      sparseCosineTopK(documents(s, d), dfLo = 2, dfHi = 4, k = 25)),
 
     // X4q SNAPSHOT DIFF: the audit between two dataset releases — which
     // docs were added, removed, changed, unchanged. Snapshot B is derived
@@ -126,26 +123,22 @@ object Ext7 {
     * exact on any engine. dfHi = Int.MaxValue degenerates to the exact
     * all-shared-term candidate set (complete support of dot > 0) — the
     * ground truth Ext7RecallSpec measures recall against. */
-  def sparseCosineTopK(docs: DataFrame, dfLo: Int, dfHi: Int, k: Int,
-      repartitionByDoc: Boolean = true,
-      persistW: Boolean = true): DataFrame = {
-    // repartitionByDoc spreads the shingle explode across task slots when
-    // the source arrives in few scan partitions (one unsplittable file).
-    // r14 A/B at sf0.1: a wash (3.09 vs 3.18 s min-of-3,
-    // BENCH_AB_r14_misc.json), so the catalog passes false. CORRECTED
-    // r15 (VERDICT r14 "what's wrong" #1): dropping it does NOT remove a
-    // shuffle — the r14 plans show 10 Exchanges either way, because the
-    // explicit doc_id repartition was being REUSED to satisfy the
-    // (doc_id, term) aggregation's distribution and Catalyst re-inserts
-    // an ENSURE_REQUIREMENTS hashpartitioning(doc_id, term) exchange
-    // when it is gone. What changes is WHERE the corpus crosses the
-    // wire: pre-explode full-document rows (repartitionByDoc = true) vs
-    // post-explode partially-aggregated (doc, term) rows (false). The
-    // false form remains the right default — the partial-agg exchange
-    // carries narrower rows and benefits from map-side combining — but
-    // no "saved corpus shuffle" is claimed.
-    val base = if (repartitionByDoc) docs.repartition(col("doc_id")) else docs
-    val tf = base
+  def sparseCosineTopK(docs: DataFrame, dfLo: Int, dfHi: Int,
+      k: Int): DataFrame = {
+    // No up-front docs.repartition(doc_id): r14 A/B at sf0.1 measured it
+    // a wash (3.09 vs 3.18 s min-of-3, BENCH_AB_r14_misc.json).
+    // CORRECTED r15 (VERDICT r14 "what's wrong" #1): dropping it does
+    // NOT remove a shuffle — the r14 plans show 10 Exchanges either way,
+    // because the explicit doc_id repartition was being REUSED to
+    // satisfy the (doc_id, term) aggregation's distribution and
+    // Catalyst re-inserts an ENSURE_REQUIREMENTS hashpartitioning(doc_id,
+    // term) exchange when it is gone. What changes is WHERE the corpus
+    // crosses the wire: pre-explode full-document rows vs post-explode
+    // partially-aggregated (doc, term) rows. The latter carries narrower
+    // rows and benefits from map-side combining — but no "saved corpus
+    // shuffle" is claimed. The weighted index w is not persisted (see
+    // the x47 entry, BENCH_AB_r15_x47w.json).
+    val tf = docs
       .select(col("doc_id"), TextOps.words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
@@ -154,10 +147,9 @@ object Ext7 {
       .agg(count(lit(1)).as("tfreq"))
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
-    val w0 = tf.join(dfq, "term").crossJoin(broadcast(n))
+    val w = tf.join(dfq, "term").crossJoin(broadcast(n))
       .select(col("doc_id"), col("term"),
         expr("(tfreq * n) div df").as("w"))
-    val w = if (persistW) w0.persistTracked() else w0
     val rare = dfq.filter(col("df") >= dfLo && col("df") <= dfHi)
       .select(col("term"))
     val idx = w.join(rare, "term").select(col("term"), col("doc_id"))

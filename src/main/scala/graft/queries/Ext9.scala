@@ -397,17 +397,15 @@ object Ext9 {
   /** j12's body. DROP TABLE alone is not enough: the in-memory catalog
     * forgets tables across JVMs while the warehouse directory survives,
     * and saveAsTable refuses a managed-table location that already
-    * exists. Round 14 (optimization, guide §2.6): with parallelWrites
-    * the two independent physical-design writes are submitted from two
-    * driver threads so the second back-fills the first one's tail. At
-    * sf0.1 this measured a WASH (1.90 vs 1.86 s min-of-3 same-boot,
+    * exists. Round 14 (optimization, guide §2.6): the two independent
+    * physical-design writes are submitted from two driver threads so
+    * the second back-fills the first one's tail. At sf0.1 this measured
+    * a WASH against serial writes (1.90 vs 1.86 s min-of-3 same-boot,
     * BENCH_AB_r14_misc.json — the local-FS writes already saturate the
     * slots); kept because on a real cluster each write's commit tail
     * idles executors (guide §2.6) and the overlap costs nothing here.
-    * Tables, layout, result frame and oracle unchanged;
-    * parallelWrites = false is the serial A/B control. */
-  private[graft] def bucketedJoin(s: SparkSession, d: String,
-      parallelWrites: Boolean = true): DataFrame = {
+    * Tables, layout, result frame and oracle unchanged. */
+  private def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     val tWrite0 = System.nanoTime()
     for (t <- Seq("graft_j12_orders_b", "graft_j12_lineitem_b")) {
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -426,10 +424,8 @@ object Ext9 {
       lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice"))
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("graft_j12_lineitem_b")
-    if (parallelWrites)
-      Seq(Future(writeOrders()), Future(writeLineitem()))
-        .foreach(Await.result(_, Duration.Inf))
-    else { writeOrders(); writeLineitem() }
+    Seq(Future(writeOrders()), Future(writeLineitem()))
+      .foreach(Await.result(_, Duration.Inf))
     // record the physical-design phase so the bench can report the
     // zero-exchange SMJ separately from the one-time table write the
     // entry (honestly, but misleadingly) folds into its wall time —

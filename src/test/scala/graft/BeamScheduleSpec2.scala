@@ -3,19 +3,38 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Held-out recall of the SCHEDULED beam form (the AbVariants
-  * x146_beam_recall__scheduled twin): same perturbed non-member queries
-  * and brute-force ground truth as the catalog x146, but searched with
-  * BeamSchedule.scheduleFor(n) instead of the fixed catalog knobs.
+/** Held-out recall of the SCHEDULED beam form: same perturbed
+  * non-member queries and brute-force ground truth as the catalog x146,
+  * but searched with BeamSchedule.scheduleFor(n) instead of the fixed
+  * catalog knobs.
   */
 class BeamScheduleSpec2 extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  /** Mean per-query recall@3 in permille (x146's recall_pm) of the
+    * scheduled form on a shipped corpus. */
   private def meanRecallPm(sf: String): Double = {
-    val rows = graft.queries.AbVariants
-      .variants("x146_beam_recall__scheduled")(spark, s"/root/testdata/sf$sf")
-      .select(col("recall_pm")).collect().map(_.getLong(0))
+    import org.apache.spark.sql.expressions.Window
+    import graft.GraftCaches.TrackedPersist
+    import graft.queries.{BeamSchedule, Ext43}
+    val e0 = Ext43.quantized(spark, s"/root/testdata/sf$sf").persistTracked()
+    val qs = e0.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("q_id"), expr(Ext43.PerturbSql).as("qq"))
+    val gt = e0.crossJoin(broadcast(qs))
+      .select(col("q_id"), col("vec_id"),
+        Ext43.idist2Hof(col("qq"), col("q")).as("dist2"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("vec_id"))))
+      .filter(col("rn") <= 3).select(col("q_id"), col("vec_id"))
+    val beam3 = BeamSchedule.beamAnnLayered(e0, 50L,
+        BeamSchedule.scheduleFor(e0.count()), perturb = true)
+      .select(col("q_id"), col("vec_id"))
+    val hits = beam3.join(gt, Seq("q_id", "vec_id"))
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
+    val rows = qs.select(col("q_id")).join(hits, Seq("q_id"), "left")
+      .select(expr("coalesce(n_hits, 0L) * 1000 div 3"))
+      .collect().map(_.getLong(0))
     rows.sum.toDouble / rows.length
   }
 

@@ -118,12 +118,10 @@ class Ext43Spec extends AnyFunSuite {
     "form's formatted plan was 886 KB at 4 hops — 2^hops nesting)") {
     import graft.queries.Ext43
     val d = "/root/testdata/sf0.001"
-    val cutDf = Ext43.beamAnn(spark, d, twoBands = true,
-      coarseLayer = false, lineageCutHops = true)
+    val cutDf = Ext43.beamAnn(spark, d)
     val cut = cutDf.collect()
     GraftCaches.releasePrior()
-    val uncut = Ext43.beamAnn(spark, d, twoBands = true,
-      coarseLayer = false, lineageCutHops = false).collect()
+    val uncut = Ext43.beamAnn(spark, d, lineageCutHops = false).collect()
     GraftCaches.releasePrior()
     assert(cut.toSeq == uncut.toSeq,
       s"lineage cut changed rows: ${cut.length} vs ${uncut.length}")

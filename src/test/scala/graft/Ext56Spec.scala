@@ -144,42 +144,4 @@ class Ext56Spec extends AnyFunSuite {
     val p = got.head._8
     assert(p > truthPpm / 3 && p < truthPpm * 3)
   }
-
-  test("x178 blocking lever (VERDICT r10 #5): the EM run on x175's " +
-    "phonetic-key blocking recovers comparable parameters — the " +
-    "field marginals and the planted corruption rate are " +
-    "blocking-invariant, and the blocking field itself goes " +
-    "uninformative") {
-    def params(sdx: Boolean) = {
-      val r = graft.queries.Ext56.fellegiSunter(spark, sf, sdxBlock = sdx)
-        .collect()
-      val h = r.head
-      (h.getLong(7), // p
-        (8 to 11).map(h.getLong),   // m_lang, m_source, m_tok0, m_chars
-        (12 to 15).map(h.getLong),  // u_*
-        r.map(x => x.getLong(0) -> x.getLong(6)).toMap) // pattern weights
-    }
-    val (pC, mC, uC, _) = params(sdx = false)
-    val (pS, mS, uS, wS) = params(sdx = true)
-    // the EM still SEPARATES under the phonetic blocking
-    assert(wS(15L) > 900000L && wS.getOrElse(0L, 0L) < 100000L)
-    // field marginals (u of comparators NOT correlated with either
-    // block key) are blocking-invariant: lang ~ 1/|langs|, source ~
-    // 1/|sources| under both blockings
-    assert(math.abs(uS(0) - uC(0)) < 50000L)  // u_lang
-    assert(math.abs(uS(1) - uC(1)) < 15000L)  // u_source
-    // the planted 1-in-7 lang corruption is recovered under BOTH
-    // blockings: m_lang near 6/7 = 857143 ppm
-    for (m <- Seq(mC(0), mS(0))) assert(m > 750000L && m < 900000L)
-    // the textbook degeneracy, asserted as evidence: blocking ON the
-    // phonetic key of tok0 makes the tok0 comparator uninformative
-    // (within-block pairs share its sound class, so u_tok0 ~ m_tok0 ~
-    // 1), while under token-count blocking tok0 agreement is the
-    // strongest match signal (u_tok0 small) — never use the blocking
-    // field as a comparator
-    assert(uS(2) > 900000L && uC(2) < 100000L)
-    // both prevalences live in a sane band (blocks differ, so p moves,
-    // but stays a minority share under either key)
-    for (p <- Seq(pC, pS)) assert(p > 10000L && p < 500000L)
-  }
 }

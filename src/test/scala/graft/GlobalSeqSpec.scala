@@ -7,13 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.GlobalSeq
 
-/** Pins the round-15 GlobalSeq work (VERDICT r14 #1): value identity of
-  * all three spellings (catalog zip, persisted zip, SQL offsets) against
-  * the single-partition window reference, and a partition-compute bound
-  * proving the CHILD of the catalog spelling executes at most twice
-  * (range-sampling + one shuffle map pass) with ZERO additional child
-  * passes at consumption — the r14 "double execution" concern is bounded
-  * by shuffle map-output reuse; only the reduce side repeats. */
+/** Pins GlobalSeq: value identity against the single-partition window
+  * reference, and a partition-compute bound proving the CHILD executes
+  * at most twice (range-sampling + one shuffle map pass) with ZERO
+  * additional child passes at consumption — the r14 "double execution"
+  * concern is bounded by shuffle map-output reuse; only the reduce side
+  * repeats. */
 class GlobalSeqSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -25,7 +24,7 @@ class GlobalSeqSpec extends AnyFunSuite {
       .foreach(_.unpersist(blocking = false))
   }
 
-  test("all three spellings match the window row_number reference, ties included") {
+  test("withSeq matches the window row_number reference, ties included") {
     import spark.implicits._
     // keys with heavy ties so the vec_id tiebreaker pattern is exercised
     val df = (1 to 997).map(i => (i % 7, i % 13, i.toLong))
@@ -35,21 +34,12 @@ class GlobalSeqSpec extends AnyFunSuite {
           Window.orderBy(col("k1"), col("k2"), col("id"))).cast("long") - 1L)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2, t._3))
-    val spellings = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "catalog" -> (() => GlobalSeq.withSeq(df,
-        Seq(col("k1"), col("k2"), col("id")), "seq")),
-      "zip" -> (() => GlobalSeq.withLegacyZip(GlobalSeq.withSeq(df,
-        Seq(col("k1"), col("k2"), col("id")), "seq"))),
-      "offsets" -> (() => GlobalSeq.withOffsets(GlobalSeq.withSeq(df,
-        Seq(col("k1"), col("k2"), col("id")), "seq"))))
-    for ((name, build) <- spellings) {
-      val got = build()
-        .select(col("k1"), col("k2"), col("id"), col("seq"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2, t._3))
-      assert(got.toSeq == want.toSeq, s"spelling $name diverged")
-      cleanup()
-    }
+    val got = GlobalSeq.withSeq(df, Seq(col("k1"), col("k2"), col("id")), "seq")
+      .select(col("k1"), col("k2"), col("id"), col("seq"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._2, t._3))
+    assert(got.toSeq == want.toSeq)
+    cleanup()
   }
 
   test("child bounded at 2 passes: the consumer adds zero child passes") {

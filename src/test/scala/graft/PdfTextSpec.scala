@@ -113,10 +113,13 @@ class PdfTextSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graftpdf")
     MiniPdf.writeFile(dir.resolve("report_10.pdf"), Seq("Entity 10 text"))
     MiniPdf.writeFile(dir.resolve("report_2.pdf"), Seq("Entity 2 text"))
+    // no digits in the name: NULL file_seq, sorted after the numbered files
+    MiniPdf.writeFile(dir.resolve("report.pdf"), Seq("Unnumbered text"))
     val rows = PdfText.fromPdfFiles(spark, dir.toString + "/*.pdf")
       .orderBy("doc_seq").collect()
     assert(rows.map(_.getString(1)).toSeq ==
-      Seq("Entity 2 text\n", "Entity 10 text\n")) // 2 < 10 numerically
+      Seq("Entity 2 text\n", "Entity 10 text\n", // 2 < 10 numerically
+        "Unnumbered text\n"))
   }
 
   test("bundled report.pdf decodes to exactly the pdf.txt fixture text") {
@@ -222,6 +225,23 @@ class PdfTextSpec extends AnyFunSuite {
     val pages = Seq("Forty bit stream cipher page")
     val plain = PdfText.extract(MiniPdf.write(pages))
     assert(PdfText.extract(MiniPdf.writeEncrypted(pages, r = 2)) == plain)
+  }
+
+  test("AESV2 stream whose ciphertext ends in 0x0D: the direct /Length " +
+    "keeps the last byte, so the page still decrypts") {
+    // MiniPdf writes stream data + "\nendstream"; find a page text whose
+    // AES ciphertext (fixed IV per object) ends in CR, so the EOL trim
+    // alone would take "\r\n" and cut one ciphertext byte
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    val (page, enc) = Iterator.from(0).map(i => s"Entity $i\nName: Cr Person")
+      .map(p => p -> MiniPdf.writeEncrypted(Seq(p), r = 4))
+      .find { case (_, bytes) =>
+        val s = new String(bytes, latin1)
+        s.charAt(s.indexOf("\nendstream") - 1) == '\r'
+      }.get
+    val plain = PdfText.extract(MiniPdf.write(Seq(page)))
+    assert(plain.contains("Cr Person"))
+    assert(PdfText.extract(enc) == plain)
   }
 
   test("AESV2-encrypted PDF (R4, 128-bit): decrypts and matches plaintext") {
