@@ -81,11 +81,6 @@ object Pipeline {
       .orderBy(col("entity_seq"))
   }
 
-  /** Convenience: run from feed paths (pre-extracted PDF text files). */
-  def runFromPaths(spark: SparkSession, xmlPath: String, pdfTextPath: String): DataFrame =
-    run(XmlEntities.parse(spark, xmlPath),
-      spark.read.option("wholetext", "true").text(pdfTextPath))
-
   /** S6 end to end: run from the feed XML plus ACTUAL PDF files — decoded
     * in the executors by [[graft.ingest.PdfText]] (the pdfplumber loop of
     * main.py:250–258, pure JVM) over Spark's binaryFile source. */
@@ -168,7 +163,7 @@ object Pipeline {
     * XML → plain PDF and plain XML → accented PDF), F6's accent-stripping
     * final scrub, full-Unicode pyTitle on country fields, the accented
     * female-dictionary entry, and accented place-token scrubs. The PDF
-    * side feeds pre-extracted text (the `runFromPaths` shape): S6's
+    * side feeds pre-extracted text (a `value` column, as [[run]] takes): S6's
     * binary decode is exercised and oracle-pinned by the ASCII twin;
     * what this twin adds is Unicode TEXT semantics downstream of decode.
     * `PipelineUnicodeSpec` pins the fixture to the oracle's parity

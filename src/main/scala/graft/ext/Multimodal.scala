@@ -14,30 +14,21 @@ import org.apache.spark.sql.functions._
   * decode for PCM and IMA-ADPCM WAV, and uncompressed-AVI frame
   * extraction — these feed the x40/x64/x65/x110/x140/x142/x145 operators
   * with decoded pixels/samples/frames, not hashes of compressed bytes.
-  * What REMAINS STUBBED: compressed-codec payloads (mp3/h264/vorbis — no
-  * codec ships in this environment) and the learned-embedding step, where
-  * [[decodeStub]] derives deterministic pseudo-features from payload
-  * bytes. The surrounding structure — binary schema, per-partition
-  * batching, typed output encoders, frame-sampling fan-out, fixed-width
-  * embedding contract — is the production shape either way: a JNI/FFM
-  * codec or ONNX runtime drops into the marked function bodies.
+  * Compressed codecs (mp3/h264/vorbis) are out of scope: the JDK ships
+  * none.
   *
   * Scale notes: decode is per-row CPU work with no shuffle — it scales
-  * linearly with executors; frame sampling multiplies rows by nFrames
-  * BEFORE any shuffle, so downstream aggregations see the exploded
-  * cardinality; payloads stay byte arrays end to end (no string round-trip).
+  * linearly with executors; payloads stay byte arrays end to end (no
+  * string round-trip).
   */
 object Multimodal {
 
   final case class MediaMeta(doc_id: Long, format: String, n_bytes: Int,
       width: Int, height: Int)
-  final case class MediaFrame(doc_id: Long, frame_idx: Int, frame_hash: Long)
-  final case class MediaEmbedding(doc_id: Long, embedding: Array[Float])
 
   // ------------------------------------------------------------------------
   // REAL container-header decode: magic-number sniffing and dimension
-  // parsing are pure byte-layout work — no codec library needed. Only the
-  // PIXEL/SAMPLE decode below this layer remains stubbed.
+  // parsing are pure byte-layout work — no codec library needed.
   // ------------------------------------------------------------------------
 
   private def be16(b: Array[Byte], i: Int): Int =
@@ -90,8 +81,8 @@ object Multimodal {
     } catch { case _: Exception => MediaMeta(id, "unknown", b.length, 0, 0) }
   }
 
-  /** Real header-decode operator: same mapPartitions shape as [[decodeStub]]
-    * but running [[sniffMeta]] — actual container parsing in the executors. */
+  /** Header-decode operator: [[sniffMeta]] per row inside mapPartitions —
+    * actual container parsing in the executors. */
   def sniff(df: DataFrame): Dataset[MediaMeta] = {
     import df.sparkSession.implicits._
     df.select(col("doc_id").cast("long"), col("payload"))
@@ -181,9 +172,7 @@ object Multimodal {
   // ------------------------------------------------------------------------
   // REAL pixel decode: the JDK ships lossless image codecs (javax.imageio
   // handles PNG's zlib/filter pipeline and BMP's raster layout with no
-  // external library), so pixel-level decode is genuine compute here — the
-  // stub below remains only for formats the JDK cannot decode (video,
-  // mp3/opus audio).
+  // external library), so pixel-level decode is genuine compute here.
   // ------------------------------------------------------------------------
 
   /** Per-image pixel statistics — the quality/feature signal an image
@@ -456,7 +445,7 @@ object Multimodal {
   // REAL video-frame decode: uncompressed AVI (RIFF container, '00db' DIB
   // frames) needs no codec — the RIFF walk plus the BMP raster rules
   // (bottom-up rows, BGR byte order, 4-byte row padding) are pure byte
-  // layout. Round 6: replaces the frame-sampling stub for this format.
+  // layout.
   // ------------------------------------------------------------------------
 
   final case class VideoFrameStats(doc_id: Long, frame_idx: Long, n_pix: Long,
@@ -894,104 +883,5 @@ object Multimodal {
     df.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) => adpcmStatsOf(id, bytes) })
-  }
-
-  /** >>> STUB DECODE <<< deterministic pseudo-decode of a binary payload.
-    * Retained ONLY for container formats the JDK cannot decode (video
-    * codecs, mp3/opus) — lossless images decode for real via
-    * [[imageStats]], WAV PCM via [[audioFeatures]], uncompressed AVI via
-    * [[aviFrameStats]], IMA-ADPCM via [[adpcmStats]]. */
-  private[ext] def fakeDecode(id: Long, bytes: Array[Byte]): MediaMeta = {
-    val n = if (bytes == null) 0 else bytes.length
-    // deterministic pseudo-header fields from payload bytes
-    var h = 1125899906842597L
-    var i = 0
-    while (i < math.min(n, 64)) { h = 31 * h + bytes(i); i += 1 }
-    val fmt = (math.floorMod(h, 3) match {
-      case 0 => "png"
-      case 1 => "jpeg"
-      case _ => "webp"
-    })
-    MediaMeta(id, fmt, n,
-      width = 16 + math.floorMod(h >> 8, 1024).toInt,
-      height = 16 + math.floorMod(h >> 20, 1024).toInt)
-  }
-
-  /** Decode a (doc_id, payload: binary) frame into typed media metadata.
-    * mapPartitions: one decoder context per partition (real codecs are
-    * expensive to construct — amortize across the batch, never per row). */
-  def decodeStub(df: DataFrame): Dataset[MediaMeta] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // >>> real codec init would happen once HERE <<<
-        it.map { case (id, bytes) => fakeDecode(id, bytes) }
-      }
-  }
-
-  /** Sample nFrames pseudo-frames per payload (video frame-sampling shape:
-    * one input row fans out to nFrames rows, computed partition-locally). */
-  def sampleFrames(df: DataFrame, nFrames: Int): Dataset[MediaFrame] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val n = if (bytes == null) 0 else bytes.length
-        (0 until nFrames).iterator.map { f =>
-          val off = if (n == 0) 0 else (f.toLong * n) / nFrames
-          var h = 1125899906842597L
-          var i = off.toInt
-          while (i < math.min(n, off.toInt + 32)) { h = 31 * h + bytes(i); i += 1 }
-          MediaFrame(id, f, h)
-        }
-      }
-  }
-
-  final case class ResizedMedia(doc_id: Long, width: Int, height: Int,
-      payload: Array[Byte])
-
-  /** Resize stage (STUB pixel transform, real operator contract): payload →
-    * payload' at the target dimensions, executed batch-at-a-time per
-    * partition exactly like a mapInPandas image transform. The stub emits a
-    * deterministic stride-sample of the input bytes sized w·h — a real
-    * implementation swaps the marked body for a codec decode + scale +
-    * re-encode, keeping schema, batching, and binary-in/binary-out shape. */
-  def resizeStub(df: DataFrame, w: Int, h: Int): Dataset[ResizedMedia] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // >>> real codec/scaler init would happen once HERE <<<
-        it.map { case (id, bytes) =>
-          val n = if (bytes == null) 0 else bytes.length
-          val out = new Array[Byte](w * h)
-          if (n > 0) {
-            var i = 0
-            while (i < out.length) {
-              out(i) = bytes(((i.toLong * n) / out.length).toInt) // stride sample
-              i += 1
-            }
-          }
-          ResizedMedia(id, w, h, out)
-        }
-      }
-  }
-
-  /** Fixed-width pseudo-embedding per payload (the mapInPandas-batch shape of
-    * an encoder model; STUB body, real contract: dim floats per row). */
-  def embedStub(df: DataFrame, dim: Int = 16): Dataset[MediaEmbedding] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val n = if (bytes == null) 0 else bytes.length
-          val v = new Array[Float](dim)
-          var i = 0
-          while (i < n) { v(i % dim) += (bytes(i) & 0xFF) / 255.0f; i += 1 }
-          MediaEmbedding(id, v)
-        }
-      }
   }
 }

@@ -39,10 +39,6 @@ object Similarity {
   /** Squared L2 norm via the same fold. */
   def norm2(a: Column): Column = dot(a, a)
 
-  /** cosine = dot / sqrt(|a|² * |b|²), computed exactly in this shape. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(norm2(a) * norm2(b))
-
   /** Squared L2 distance as the same strictly sequential left-fold over
     * per-element squared differences — NOT |a|²+|b|²−2·a·b, which is
     * mathematically equal but rounds differently; the oracle replays

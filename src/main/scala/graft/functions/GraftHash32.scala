@@ -337,7 +337,6 @@ case class GraftIDist2(left: Expression, right: Expression)
 case class SortedIntersectCard(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 
-  private val longArray = ArrayType(LongType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _)) =>

@@ -3,8 +3,10 @@ package graft.ingest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** S7/S8: PDF text → per-entity chunks with programme tag
-  * (SURVEY §2.1-S7, main.py:261–304).
+/** S7: PDF text → per-entity chunks with programme tag
+  * (SURVEY §2.1-S7, main.py:261–304). The reference's S8 step writes the
+  * chunks to per-programme files and reads them back; here the chunk frame
+  * passes straight to the index build.
   *
   * The zero-width lookahead split `(?=Entity\s+\d+\b)` passes straight
   * through to `java.util.regex.Pattern.split` (SURVEY H4). Chunk order is
@@ -37,17 +39,4 @@ object PdfChunks {
     GlobalSeq.withSeq(tagged, Seq(col("doc_seq"), col("pos")), "chunk_seq")
       .select(col("chunk_seq"), col("programme"), col("chunk"))
   }
-
-  /** F18: filename-safe programme tag (main.py:298–299). */
-  def safeProgramme(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val sanitized = regexp_replace(regexp_replace(c, "[^A-Za-z0-9]+", "_"), "^_+|_+$", "")
-    when(c.isNull || sanitized === "", lit("GEN")).otherwise(sanitized)
-  }
-
-  /** S8 sink: text chunks partitioned by sanitized programme. */
-  def writeChunks(chunked: DataFrame, outDir: String): Unit =
-    chunked
-      .withColumn("programme", safeProgramme(col("programme")))
-      .select(col("programme"), col("chunk").as("value"))
-      .write.mode("overwrite").partitionBy("programme").text(outDir)
 }

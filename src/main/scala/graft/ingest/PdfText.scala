@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 import scala.util.matching.Regex
 
 /** S6: REAL PDF text extraction (SURVEY §2.1-S6; reference pdfplumber loop
@@ -592,7 +593,7 @@ object PdfText {
         new javax.crypto.spec.SecretKeySpec(hash2B(empty, kSalt, empty), "AES"),
         new javax.crypto.spec.IvParameterSpec(new Array[Byte](16)))
       Some(c.doFinal(ue.take(32)))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** AES-CBC decryption of an AESV2/AESV3 stream (the key length picks the
@@ -612,7 +613,7 @@ object PdfText {
         plain.takeRight(pad).forall(b => (b & 0xff) == pad))
         plain.dropRight(pad)
       else plain
-    } catch { case _: Throwable => Array.emptyByteArray }
+    } catch { case NonFatal(_) => Array.emptyByteArray }
   }
 
   /** The PDF string value following name `key` in `dict` — literal `(…)`

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
   * wholetext read → namespace strip → `from_xml` into a nested array →
   * `posexplode` (array order = document order ⇒ entity_seq, SURVEY H1).
   *
-  * Scale note: one row per feed FILE before the explode — many feed files
-  * parallelize across executors; entity_seq is then (file_seq, pos) — for the
-  * single-feed contract case file_seq is constant 0.
+  * Scale note: one row per feed FILE before the explode. entity_seq is the
+  * position inside its file, so the contract is one feed file: several
+  * files under one path give overlapping entity_seq values.
   */
 object XmlEntities {
 
@@ -59,22 +59,6 @@ object XmlEntities {
   /** Parse feed files under `path` into entity rows with `entity_seq`. */
   def parse(spark: SparkSession, path: String): DataFrame =
     fromXmlStrings(spark.read.option("wholetext", "true").text(path))
-
-  /** Multi-file feeds: entity_seq from [[fromXmlStrings]] restarts per feed
-    * file; this re-derives ONE global feed order as (file name, position) —
-    * the Spark analogue of the reference's numeric-suffix filename sort
-    * (O1, main.py:543–546) — via the GlobalSeq range-sort + zipWithIndex
-    * plan, never a single-partition window. */
-  def parseGlobalSeq(spark: SparkSession, path: String): DataFrame = {
-    val opts = Map("attributePrefix" -> "", "valueTag" -> "_VALUE")
-    val perFile = spark.read.option("wholetext", "true").text(path)
-      .withColumn("_file", input_file_name())
-      .withColumn("doc", from_xml(stripNamespaces(col("value")), docType,
-        scala.jdk.CollectionConverters.MapHasAsJava(opts).asJava))
-      .select(col("_file"), posexplode(col("doc.sanctionEntity")).as(Seq("pos", "entity")))
-    GlobalSeq.withSeq(perFile, Seq(col("_file"), col("pos")), "entity_seq")
-      .select(col("entity_seq"), col("entity.*"))
-  }
 
   /** Same, over an in-memory (doc) DataFrame with column `value` — used by
     * tests and fixture-backed runs. */

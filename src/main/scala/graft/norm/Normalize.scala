@@ -22,9 +22,6 @@ object Normalize {
 
   // -- scalar UDFs (SURVEY §2.11) --------------------------------------------
 
-  val pyTitleUdf = udf((s: String) => PyText.pyTitle(s))
-  val cleanNameUdf = udf((s: String) => PyText.cleanName(s))
-  val isLatinNameUdf = udf((s: String) => PyText.isLatinName(s))
   val cleanFullnameFinalUdf = udf((s: String) => PyText.cleanFullnameNoAccentsFinal(s))
   val scrubPlaceTokensUdf = udf((s: String) => PyText.scrubPlaceTokens(s))
   val dedupCaseInsensitiveUdf = udf((xs: Seq[String]) => PyText.dedupCaseInsensitive(xs))

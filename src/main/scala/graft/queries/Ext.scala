@@ -214,8 +214,8 @@ object Ext {
     // X3 brute-force cosine top-k: query set broadcast against the corpus;
     // exact double cosine, rank by truncated similarity with id tie-break.
     "x6_cosine_topk" -> ((s, d) => {
-      // squared norms precomputed per vector (one fold each) — inlining
-      // Similarity.cosine would re-fold both norms for every PAIR
+      // squared norms precomputed per vector (one fold each) — a pairwise
+      // dot / sqrt(norm2 * norm2) would re-fold both norms for every PAIR
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("nv", Similarity.norm2(col("v")))

@@ -7,11 +7,11 @@ import graft.tables.Tables._
 import graft.ext.Similarity
 
 /** Round-5 batch 5: the built-in session_window operator as a batch catalog
-  * entry (w25 — the streaming module already uses it; this pins its batch
-  * twin against the islands oracle), TPC-H Q12's conditional-aggregation
-  * shape (q12), mergeable HLL sketches with the union property (x69), and
-  * 1-NN classification evaluation over the embeddings table (x70 — the
-  * eval-metrics step of an embedding pipeline).
+  * entry (w25 — pinned against the islands oracle), TPC-H Q12's
+  * conditional-aggregation shape (q12), mergeable HLL sketches with the
+  * union property (x69), and 1-NN classification evaluation over the
+  * embeddings table (x70 — the eval-metrics step of an embedding
+  * pipeline).
   */
 object Ext13 {
 

@@ -11,8 +11,7 @@ import graft.GraftCaches.TrackedPersist
   * a full 2-round Lloyd k-means over integer-quantized embeddings (the
   * clustering step SemDeDup/curriculum pipelines run — x37 is one update
   * step, this is the iterated loop), l-diversity (the privacy audit that
-  * complements x68's k-anonymity), and per-day top-k event types (the
-  * batch twin of the streaming windowed top-k in streaming/DocStreams).
+  * complements x68's k-anonymity), and per-day top-k event types.
   */
 object Ext25 {
 
@@ -171,11 +170,9 @@ object Ext25 {
     }),
 
     // W-FAMILY, WINDOWED TOP-K: per tumbling event-time day, the top-3
-    // event types by count — the batch twin of the streaming
-    // DocStreams.windowedTypeCounts + topKFinish pair (the spec asserts
-    // stream == batch on this exact shape). The rank window partitions
-    // by day, so everything stays keyed; no global sort until the final
-    // tiny ordered output.
+    // event types by count. The rank window partitions by day, so
+    // everything stays keyed; no global sort until the final tiny ordered
+    // output.
     "w32_window_topk" -> ((s, d) => {
       val counts = events(s, d)
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))

@@ -31,8 +31,7 @@ object Ext3 {
     // number them, then a per-(user, session) aggregate. ONE shuffle on
     // user_id serves both window passes (same partitioning + ordering), and
     // the final groupBy is partial-aggregable; sessions never span users, so
-    // the plan holds at any user count. The batch twin of
-    // streaming/EventStreams' session windows.
+    // the plan holds at any user count.
     "w10_sessionize" -> ((s, d) => {
       val gapUs = 24L * 3600 * 1000000 // 24 h in MICROSECONDS (see scaladoc)
       val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))

@@ -32,21 +32,21 @@ object Tables {
     * event-time windows). The session timezone is pinned to UTC, so the
     * NTZ→LTZ cast below relabels the stored micros without shifting them —
     * exactly how DuckDB reads the naive column. */
-  def events(s: SparkSession, d: String): DataFrame = eventsFrom(table(s, d, "events"))
-
-  /** Shared by batch and readStream paths (streaming: pass
-    * `spark.readStream.schema(batchSchema).parquet(dir)` through here). */
-  def eventsFrom(raw: DataFrame): DataFrame = raw.schema("ts").dataType match {
-    case LongType =>
-      // integer `div`, NOT floor(ns / 1000.0): epoch nanos ≈ 1.7e18 exceed
-      // a double's 53-bit mantissa, so the float path lands ±1 µs off the
-      // exact truncation DuckDB applies when it reads the same column
-      raw.withColumn("ts_ns", col("ts"))
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    case TimestampNTZType =>
-      raw.withColumn("ts_ns", unix_micros(col("ts").cast(TimestampType)) * 1000)
-        .withColumn("ts", col("ts").cast(TimestampType))
-    case _ => raw.withColumn("ts_ns", unix_micros(col("ts")) * 1000)
+  def events(s: SparkSession, d: String): DataFrame = {
+    val raw = table(s, d, "events")
+    raw.schema("ts").dataType match {
+      case LongType =>
+        // integer `div`, NOT floor(ns / 1000.0): epoch nanos ≈ 1.7e18
+        // exceed a double's 53-bit mantissa, so the float path lands ±1 µs
+        // off the exact truncation DuckDB applies when it reads the same
+        // column
+        raw.withColumn("ts_ns", col("ts"))
+          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType =>
+        raw.withColumn("ts_ns", unix_micros(col("ts").cast(TimestampType)) * 1000)
+          .withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw.withColumn("ts_ns", unix_micros(col("ts")) * 1000)
+    }
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

@@ -1,6 +1,71 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.{SparkPlan, LeafExecNode, GlobalLimitExec, LocalLimitExec, LocalTableScanExec, RangeExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Plan walks behind [[GlobalWindowInventorySpec]]: find every
+  * partition-less Window and judge whether its input is value-bounded. */
+object WindowInventory {
+
+  /** Row-count-bounded input judgment: true when
+    * every path from `p` to a leaf passes a row-collapsing node — an
+    * Aggregate (group-count-sized output), a Limit, a literal local
+    * relation, or a literal-bounded Range. Joins/unions require all
+    * inputs bounded. Generate (explode) is NOT treated as pass-through:
+    * re-expanding a collapsed frame can restore corpus-scale row counts.
+    * Cached frames (InMemoryRelation) are judged by the same walk over
+    * their cached physical plan.
+    *
+    * KNOWN LIMITATION (ADVICE r13): "Aggregate ⇒ bounded" is a
+    * CARDINALITY heuristic, not a proof — an Aggregate grouped on a
+    * near-unique key (e.g. a raw doc_id) emits corpus-scale rows and
+    * would still pass this machine check. Static plans carry no
+    * group-count statistics, so that case is guarded by the HUMAN leg of
+    * the closed-world protocol: each enrolled global window's grouping
+    * keys are reviewed before it joins the allowlist, and
+    * `GlobalWindowInventorySpec`'s allowlist is the reviewed record.
+    * An enrollment whose Aggregate groups on an id-like scan column must
+    * be rejected there even though valueBounded says true. */
+  def valueBounded(p: LogicalPlan): Boolean = p match {
+    case _: Aggregate => true
+    case _: GlobalLimit => true
+    case _: LocalLimit => true
+    case _: LocalRelation => true
+    case _: OneRowRelation => true
+    case _: Range => true
+    case imr: InMemoryRelation => physBounded(imr.cachedPlan)
+    case _: Generate => false
+    case j: Join => valueBounded(j.left) && valueBounded(j.right)
+    case u: Union => u.children.forall(valueBounded)
+    case _: LeafNode => false
+    case other => other.children.nonEmpty && other.children.forall(valueBounded)
+  }
+
+  /** The physical twin of [[valueBounded]], for cached subtrees. */
+  def physBounded(p: SparkPlan): Boolean = p match {
+    case _: BaseAggregateExec => true
+    case _: GlobalLimitExec => true
+    case _: LocalLimitExec => true
+    case _: LocalTableScanExec => true
+    case _: RangeExec => true
+    case a: AdaptiveSparkPlanExec => physBounded(a.inputPlan)
+    case s: InMemoryTableScanExec => physBounded(s.relation.cachedPlan)
+    case _: org.apache.spark.sql.execution.GenerateExec => false
+    case j: BaseJoinExec => physBounded(j.left) && physBounded(j.right)
+    case _: LeafExecNode => false
+    case other => other.children.nonEmpty && other.children.forall(physBounded)
+  }
+
+  def globalWindows(plan: LogicalPlan): Seq[Window] = {
+    val all = plan +: plan.subqueriesAll
+    all.flatMap(_.collect { case w: Window if w.partitionSpec.isEmpty => w })
+  }
+}
 
 /** Round 13 (VERDICT r12 #1 "What's wrong" item): the partition-less
   * window inventory, made a CLOSED WORLD.

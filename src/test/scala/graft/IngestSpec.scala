@@ -6,7 +6,7 @@ import graft.ingest.{PdfChunks, XmlEntities}
 import graft.matching.PdfParse
 
 /** Edge cases of the ingest layer and the PDF line scanner
-  * (SURVEY §2.1 S4/S7/S8/F18, §2.4 J1). */
+  * (SURVEY §2.1 S4/S7, §2.4 J1). */
 class IngestSpec extends AnyFunSuite {
 
   test("XML parse: multiple feed files, entity_seq restarts per file row") {
@@ -20,19 +20,6 @@ class IngestSpec extends AnyFunSuite {
     assert(out.filter(col("subjectType.classificationCode") === "P").count() == 1)
   }
 
-  test("parseGlobalSeq: one contiguous entity_seq across multiple feed files") {
-    val spark = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("feeds")
-    def write(name: String, n: Int): Unit =
-      java.nio.file.Files.writeString(dir.resolve(name),
-        "<export>" + ("<sanctionEntity/>" * n) + "</export>")
-    write("feed_a.xml", 2)
-    write("feed_b.xml", 3)
-    val out = XmlEntities.parseGlobalSeq(spark, dir.toString)
-    val seqs = out.select("entity_seq").collect().map(_.getLong(0)).sorted.toSeq
-    assert(seqs == (0L until 5L))
-  }
-
   test("malformed XML degrades to zero entities, no exception (main.py:1101–1103)") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -44,37 +31,15 @@ class IngestSpec extends AnyFunSuite {
   test("PDF chunking: header dropped, programme sniff, GEN default") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val text = "header junk\nEntity 1\nProgramme: syria\nEntity 2\nno programme here"
+    // the programme regex captures the first alnum run only ("syria" of
+    // "syria/x", main.py:274)
+    val text = "header junk\nEntity 1\nProgramme: syria/x\nEntity 2\nno programme here"
     val rows = PdfChunks.chunks(Seq(text).toDF("value"))
       .orderBy("chunk_seq").collect()
     assert(rows.length == 2)
     assert(rows(0).getAs[String]("programme") == "SYRIA")
     assert(rows(1).getAs[String]("programme") == "GEN")
     assert(rows(0).getAs[Long]("chunk_seq") == 0L)
-  }
-
-  test("programme filename sanitizer (F18)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val out = Seq("EU/Taliban!", "***", null)
-      .toDF("p")
-      .select(PdfChunks.safeProgramme(col("p")).as("s"))
-      .collect().map(_.getString(0)).toSeq
-    assert(out == Seq("EU_Taliban", "GEN", "GEN"))
-  }
-
-  test("chunk sink: partitioned by sanitized programme and re-readable") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("chunks").toString
-    // the programme regex captures the first alnum run only ("a" of "a/b",
-    // main.py:274); the sanitizer handles raw tags from other sources
-    val chunked = PdfChunks.chunks(
-      Seq("Entity 1\nProgramme: a/b\nbody\nEntity 2\ntext").toDF("value"))
-    PdfChunks.writeChunks(chunked, dir)
-    val dirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("programme=")).sorted
-    assert(dirs.toSeq == Seq("programme=A", "programme=GEN"))
-    assert(spark.read.text(dir).count() > 0)
   }
 
   test("PDF scanner: name continuation line and label truncation") {

@@ -5,60 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.ext.Multimodal
 
 /** Multimodal plumbing: binary column in, typed datasets out, deterministic
-  * across runs and partitionings (the stub decode must behave like a pure
-  * per-row decoder). */
+  * across runs and partitionings (every decode is a pure per-row
+  * function). */
 class MultimodalSpec extends AnyFunSuite {
 
   private lazy val payloads = {
     val spark = TestSpark.spark
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
-  }
-
-  test("decodeStub: typed metadata, one row per payload, deterministic") {
-    val out1 = Multimodal.decodeStub(payloads).collect().sortBy(_.doc_id)
-    val out2 = Multimodal.decodeStub(payloads.repartition(7)).collect().sortBy(_.doc_id)
-    assert(out1.length == 500)
-    assert(out1.toSeq == out2.toSeq) // partitioning must not change results
-    assert(out1.forall(m => m.width >= 16 && m.height >= 16 && m.n_bytes > 0))
-    assert(out1.map(_.format).toSet.subsetOf(Set("png", "jpeg", "webp")))
-  }
-
-  test("sampleFrames: nFrames rows per payload, stable frame hashes") {
-    val out = Multimodal.sampleFrames(payloads.limit(10), 4).collect()
-    assert(out.length == 40)
-    assert(out.groupBy(_.doc_id).forall(_._2.map(_.frame_idx).sorted.sameElements(0 until 4)))
-  }
-
-  test("embedStub: fixed-width float vectors usable by the similarity ops") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val emb = Multimodal.embedStub(payloads.limit(50), dim = 16)
-    val df = emb.toDF()
-    assert(df.select(size(col("embedding"))).distinct().as[Int].collect().toSeq == Seq(16))
-    // plumb straight into the cosine primitive from ext/Similarity
-    val e = df.select(col("doc_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("doc_id") === 0)
-      .select(col("v").as("qv"))
-    val sims = q.crossJoin(e)
-      .select(col("doc_id"), graft.ext.Similarity.cosine(col("qv"), col("v")).as("cos"))
-      .collect()
-    assert(sims.length == 50)
-    val self = sims.find(_.getLong(0) == 0).get.getDouble(1)
-    assert(math.abs(self - 1.0) < 1e-12) // self-similarity
-  }
-
-  test("resizeStub: deterministic fixed-size output, binary in/binary out") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val df = Seq((1L, Array.tabulate(100)(_.toByte)), (2L, Array.emptyByteArray))
-      .toDF("doc_id", "payload")
-    val out = graft.ext.Multimodal.resizeStub(df, 8, 4).collect().sortBy(_.doc_id)
-    assert(out.forall(r => r.width == 8 && r.height == 4 && r.payload.length == 32))
-    // deterministic: same input → same bytes
-    val again = graft.ext.Multimodal.resizeStub(df, 8, 4).collect().sortBy(_.doc_id)
-    assert(out.zip(again).forall { case (a, b) => a.payload.sameElements(b.payload) })
-    assert(out(1).payload.forall(_ == 0)) // empty payload → zero frame
   }
 
   test("sniffMeta: REAL container-header parsing (png/gif/bmp/jpeg/wav)") {
@@ -111,6 +65,11 @@ class MultimodalSpec extends AnyFunSuite {
     val out = graft.ext.Multimodal.sniff(df).collect().sortBy(_.doc_id)
     assert(out(0) == graft.ext.Multimodal.MediaMeta(10, "png", png.length, 16, 32))
     assert(out(1).format == "unknown")
+    // one row per payload, and partitioning must not change results
+    val corpus1 = Multimodal.sniff(payloads).collect().sortBy(_.doc_id)
+    val corpus2 = Multimodal.sniff(payloads.repartition(7)).collect().sortBy(_.doc_id)
+    assert(corpus1.length == 500)
+    assert(corpus1.toSeq == corpus2.toSeq)
   }
 
   /** Stereo PCM16 WAV with an extra LIST chunk before `data` (exercises the

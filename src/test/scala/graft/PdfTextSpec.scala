@@ -297,6 +297,10 @@ class PdfTextSpec extends AnyFunSuite {
     // not block-aligned / too short → empty, never a throw
     assert(PdfText.aesDecrypt(key, ct.drop(1)).isEmpty)
     assert(PdfText.aesDecrypt(key, Array[Byte](1, 2, 3)).isEmpty)
+    // a key of no AES length: the cipher rejects it at init, and the
+    // well-formed ct rules out the length guard as the reason
+    for (len <- Seq(0, 5, 15, 17, 31, 33))
+      assert(PdfText.aesDecrypt(Array.fill(len)(1.toByte), ct).isEmpty, s"key length $len")
   }
 
   test("objectKey: the AES sAlT suffix derives a different key than RC4") {

@@ -43,4 +43,29 @@ class SqlCatalogSpec extends AnyFunSuite {
       .collect()(0).getLong(0)
     assert(n > 0) // ASCII names: key == lowercased trim
   }
+
+  test("events loader: nanos, NTZ and UTC-micros ts give the same ts and ts_ns") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros, unix_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    // as a double these nanos round up past the µs boundary; only the
+    // integer div truncates them to the micros DuckDB reads
+    val ns = 1700000000123456999L
+    val us = ns / 1000
+    val one = spark.range(1).select(col("id").as("event_id"))
+    val micros = timestamp_micros(lit(us))
+    val encodings = Seq(
+      (LongType, one.withColumn("ts", lit(ns)), ns),
+      (TimestampNTZType, one.withColumn("ts", micros.cast(TimestampNTZType)), us * 1000),
+      (TimestampType, one.withColumn("ts", micros), us * 1000))
+    for ((stored, df, tsNs) <- encodings) {
+      val dir = java.nio.file.Files.createTempDirectory("events-ts").toString
+      df.write.parquet(s"$dir/events.parquet")
+      assert(Tables.table(spark, dir, "events").schema("ts").dataType == stored)
+      val ev = Tables.events(spark, dir)
+      assert(ev.schema("ts").dataType == TimestampType, stored)
+      val r = ev.select(unix_micros(col("ts")), col("ts_ns")).head()
+      assert((r.getLong(0), r.getLong(1)) == ((us, tsNs)), stored)
+    }
+  }
 }
